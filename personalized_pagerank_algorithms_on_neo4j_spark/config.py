@@ -1,12 +1,15 @@
 """Algorithm configuration & parameter derivations.
 
 Mirrors the reference's Algo_Conf (reference: Algo_Conf.java:25-81): whole-graph
-algorithms run with delta = pfail = 1/n and rsum = 1.0; FORA top-k starts at
+algorithms run with delta = pfail = 1/n (the reference's rsum = 1.0 is the
+unit source mass, which no formula here needs); FORA top-k starts at
 delta = 1/k, floors at min_delta = 1/n, and uses
 pfail' = 1/n^2/ln(n/k) (Algo_Conf.java:71-81).
 
 The FORA bound formulas (Fora_Whole_Graph.java:86-87, Fora_Topk.java:112-133):
   rmax  = eps * sqrt(delta / (3 m ln(2/pfail))) / (1 - alpha)   [whole-graph]
+  rmax' = r * sqrt(m r) * 3,  r = eps' * sqrt(delta / (3 m ln(2/pfail')))
+                                                       [top-k, per round]
   omega = (eps + 2) * ln(2/pfail) / eps^2 / delta
 Monte-Carlo walk count (Monte_Carlo.java:145):
   omega_mc = 3 * ln(2/pfail) / eps^2 / delta
@@ -48,21 +51,14 @@ LOCAL_TEXT_BYTES = int(
 
 
 @dataclass
-class GraphScale:
-    n: int  # node count
-    m: int  # edge count
-
-
-@dataclass
 class WholeGraphConf:
-    """delta = pfail = 1/n, rsum = 1 (Algo_Conf.java:29-45)."""
+    """delta = pfail = 1/n (Algo_Conf.java:29-45)."""
 
     alpha: float
     n: int
     m: int
     delta: float = field(init=False)
     pfail: float = field(init=False)
-    rsum: float = 1.0
 
     def __post_init__(self) -> None:
         self.delta = 1.0 / self.n
@@ -93,7 +89,6 @@ class TopkConf:
     delta: float = field(init=False)
     min_delta: float = field(init=False)
     pfail: float = field(init=False)
-    rsum: float = 1.0
 
     def __post_init__(self) -> None:
         # the reference formula assumes k < n (log(n/k) = 0 at k == n would
@@ -104,8 +99,16 @@ class TopkConf:
         log_term = math.log(self.n / self.k) if self.n > self.k else 1.0
         self.pfail = 1.0 / self.n / self.n / log_term
 
-    def min_rmax(self, epsilon_halved: float) -> float:
-        # Fora_Topk.java:113: eps' * sqrt(min_delta / (3 m ln(2/pfail)))
-        return epsilon_halved * math.sqrt(
-            self.min_delta / 3.0 / self.m / math.log(2.0 / self.pfail)
-        )
+    def round_rmax(self, epsilon_halved: float, delta: float) -> float:
+        """Push threshold of the round at ``delta``: eps' * sqrt(delta / (3 m
+        ln(2/pfail))) (Fora_Topk.java:112), scaled by sqrt(m * rmax) * 3
+        (Fora_Topk.java:133). At ``min_delta`` it is the final round's
+        threshold, the two-threshold push's floor."""
+        rmax = epsilon_halved * math.sqrt(delta / 3.0 / self.m / math.log(2.0 / self.pfail))
+        rmax *= math.sqrt(self.m * rmax) * 3.0
+        return rmax
+
+    def round_omega(self, epsilon_halved: float, delta: float) -> float:
+        """Walk budget omega of the round at ``delta``."""
+        eps = epsilon_halved
+        return (eps + 2.0) * math.log(2.0 / self.pfail) / eps / eps / delta

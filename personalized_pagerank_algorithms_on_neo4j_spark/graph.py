@@ -361,6 +361,17 @@ class PropertyGraph:
     def fits_local(self) -> bool:
         return self.m <= LOCAL_EDGE_THRESHOLD
 
+    def resolve_mode(self, mode: str) -> str:
+        """An operator's ``mode`` argument as the strategy to run: "auto"
+        picks "local" below the driver-local cutoff, else "distributed"."""
+        if mode == "auto":
+            return "local" if self.fits_local() else "distributed"
+        if mode not in ("local", "distributed"):
+            raise ValueError(
+                f"mode must be 'auto', 'local' or 'distributed', got {mode!r}"
+            )
+        return mode
+
     @cached_property
     def local(self) -> LocalGraph:
         node_ids = np.sort(
@@ -415,7 +426,3 @@ class PropertyGraph:
         per operator call. Only valid on the local-cutoff path (same size
         regime as a broadcast join side)."""
         return self.spark.sparkContext.broadcast(self.local)
-
-    def state_df(self, pairs: list[tuple[int, float]]) -> DataFrame:
-        """Small helper: (node, ppr) DataFrame from driver-side pairs."""
-        return self.spark.createDataFrame(pairs, schema="node long, ppr double")

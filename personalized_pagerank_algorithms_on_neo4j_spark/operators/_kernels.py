@@ -24,6 +24,7 @@ from collections import deque
 
 import numpy as np
 
+from ..config import TopkConf
 from ..graph import LocalGraph
 
 # ---------------------------------------------------------------------------
@@ -365,23 +366,20 @@ def fora_topk(
     """FORA top-k: iterative delta refinement 1/k -> 1/n with resumable push
     (two thresholds) + walks, early exit when the k-th score clears
     (1+eps')*delta (Fora_Topk.java:102-184)."""
-    n = lg.n
+    conf = TopkConf(alpha=alpha, n=lg.n, m=m, k=k)  # clamps k into [1, n-1]
+    k = conf.k
     eps = epsilon * 0.5  # Fora_Topk.java:110
-    k = max(1, min(k, n - 1)) if n > 1 else 1  # log(n/k) must stay positive
-    delta = 1.0 / k
-    min_delta = 1.0 / n
-    pfail = 1.0 / n / n / (np.log(n / k) if n > k else 1.0)
+    delta = conf.delta
+    if lg.out_deg[s] == 0:
+        pi = np.zeros(lg.n)
+        pi[s] = 1.0
+        return pi
     push_pi = None  # push-only reserve carried across rounds; walk increments
     r = None  # are recomputed per round (Fora_Topk.java:118-146 copies the
     # push state each round, discarding the previous round's walk additions)
     while True:
-        if lg.out_deg[s] == 0:
-            pi = np.zeros(n)
-            pi[s] = 1.0
-            return pi
-        rmax = eps * np.sqrt(delta / 3.0 / m / np.log(2.0 / pfail))
-        rmax *= np.sqrt(m * rmax) * 3.0  # Fora_Topk.java:133
-        omega = (eps + 2.0) * np.log(2.0 / pfail) / eps / eps / delta
+        rmax = conf.round_rmax(eps, delta)
+        omega = conf.round_omega(eps, delta)
         push_pi, r, _ = forward_push_batch(lg, s, alpha, rmax, reserve=push_pi, residue=r)
         rsum_rw = r.sum() * (1.0 - alpha)
         num_walks = float(int(omega * rsum_rw))  # (long) cast, Fora_Topk.java:154
@@ -392,9 +390,9 @@ def fora_topk(
         )
         kth = kth_largest(pi[pi > 0], k)
         kth = 0.0 if kth is None else kth
-        if kth >= (1.0 + eps) * delta or delta <= min_delta:
+        if kth >= (1.0 + eps) * delta or delta <= conf.min_delta:
             return pi
-        delta = max(min_delta, delta / 4.0)
+        delta = max(conf.min_delta, delta / 4.0)
 
 
 # ---------------------------------------------------------------------------

@@ -37,9 +37,7 @@ def backward_search(
     max_supersteps: int = 10_000,
 ) -> DataFrame:
     """PPR *to* `target` from every source. Returns DataFrame(node, ppr)."""
-    if mode == "auto":
-        mode = "local" if graph.fits_local() else "distributed"
-    if mode == "local":
+    if graph.resolve_mode(mode) == "local":
         lg = graph.local
         pi, _, _ = _kernels.backward_search_batch(
             lg, lg.dense(target), alpha, rmax, max_supersteps=max_supersteps

@@ -50,9 +50,7 @@ def base_preprocess(
     rmax = threshold if rmax is None else rmax
     if targets is None:
         targets = graph.nodes.select(F.col("id").alias("target"))
-    if mode == "auto":
-        mode = "local" if graph.fits_local() else "distributed"
-    if mode == "local":
+    if graph.resolve_mode(mode) == "local":
         all_pairs = _base_all_local(graph, targets, rmax, alpha)
     else:
         # pi(v -> t): invert to (source=v, target=t)

@@ -18,12 +18,17 @@ Top-k: delta refines 1/k -> 1/n (divide by 4 per round), per round a resumable
 push + walks, early exit when the k-th score >= (1+eps')*delta. The per-round
 push state carries over; walk contributions are recomputed each round
 (Fora_Topk.java:118-146 re-copies the push state, dropping the previous
-round's walk additions).
+round's walk additions). The per-round rmax and omega come from
+``config.TopkConf``, shared with the local kernel.
+
+Distributed mode: both variants push through the one two-threshold loop,
+``forward_push.push_round`` — whole-graph runs one round per rmax halving,
+top-k one per delta round — carrying the state and candidate frontier
+between rounds, with the floor ``min_rmax`` set to the last round's rmax. An
+out-degree-0 source is checked once per query, before the first round.
 """
 
 from __future__ import annotations
-
-import math
 
 import numpy as np
 from pyspark.sql import DataFrame
@@ -33,7 +38,7 @@ from ..config import DEFAULT_ALPHA, DEFAULT_EPSILON, TopkConf, WholeGraphConf
 from ..graph import PropertyGraph
 from . import _kernels
 from ._result import ppr_result_from_dense
-from .forward_push import _forward_push_distributed_state, _forward_push_topk_state
+from .forward_push import dangling_source_result, push_round, source_is_dangling
 from .monte_carlo import run_walks_counted
 
 
@@ -47,9 +52,7 @@ def fora_whole_graph(
     push_halvings: int = 2,
 ) -> DataFrame:
     conf = WholeGraphConf(alpha=alpha, n=graph.n, m=graph.m)
-    if mode == "auto":
-        mode = "local" if graph.fits_local() else "distributed"
-    if mode == "local":
+    if graph.resolve_mode(mode) == "local":
         lg = graph.local
         rng = np.random.default_rng(seed)
         pi = _kernels.fora_whole_graph(
@@ -78,16 +81,18 @@ def _fora_whole_graph_distributed(
     seed: int | None,
     push_halvings: int,
 ) -> DataFrame:
-    rmax = conf.fora_rmax(epsilon)
+    # out-degree-0 source short-circuits to pi(s,s)=1 (Forward_Push.java:72-76)
+    if source_is_dangling(graph, source):
+        return dangling_source_result(graph, source)
     omega = conf.fora_omega(epsilon)
-
-    state = _forward_push_distributed_state(graph, source, rmax, alpha, 10_000)
+    rmaxes = [conf.fora_rmax(epsilon)]
     for _ in range(push_halvings):
-        rmax /= 2.0
-        state = _forward_push_distributed_state(
-            graph, source, rmax, alpha, 10_000, init_state=state
+        rmaxes.append(rmaxes[-1] / 2.0)
+    state = cand = None
+    for rmax in rmaxes:
+        state, cand = push_round(
+            graph, source, rmax, rmaxes[-1], alpha, 10_000, state=state, cand=cand
         )
-    state = state.localCheckpoint(eager=True)
 
     rsum = state.agg(F.sum("residue")).collect()[0][0] or 0.0
     rsum_local = rsum * (1.0 - alpha)
@@ -147,9 +152,7 @@ def fora_topk(
     seed: int | None = 42,
 ) -> DataFrame:
     """FORA top-k whole result (caller applies tie-aware top-k retrieval)."""
-    if mode == "auto":
-        mode = "local" if graph.fits_local() else "distributed"
-    if mode == "local":
+    if graph.resolve_mode(mode) == "local":
         lg = graph.local
         rng = np.random.default_rng(seed)
         pi = _kernels.fora_topk(
@@ -169,19 +172,10 @@ def _fora_topk_distributed(
 ) -> DataFrame:
     conf = TopkConf(alpha=alpha, n=graph.n, m=graph.m, k=k)
     # out-degree-0 source short-circuits to pi(s,s)=1 (Fora_Topk.java:127-131)
-    src_deg = (
-        graph.degrees.where(
-            (F.col("node") == int(source)) & (F.col("out_degree") > 0)
-        ).take(1)
-    )
-    if not src_deg:
-        return graph.spark.createDataFrame(
-            [(int(source), 1.0)], schema="node long, ppr double"
-        )
+    if source_is_dangling(graph, source):
+        return dangling_source_result(graph, source)
     eps = epsilon * 0.5
     delta = conf.delta
-    pfail = conf.pfail
-    m = graph.m
     # two-threshold resumable frontier (I2): min_rmax is the floor rmax of the
     # final refinement round (Fora_Topk.java:112-113); nodes that ever reach
     # r/out >= min_rmax are carried as next-round candidates so later rounds
@@ -195,20 +189,15 @@ def _fora_topk_distributed(
     # round's actual qualification threshold and the frontier provably covers
     # every node any later round would qualify — exact equivalence with full
     # re-qualification (and with the local kernel's forward_push_batch).
-    min_rmax = conf.min_rmax(eps)
-    min_rmax *= math.sqrt(m * min_rmax) * 3.0
-    state = None
-    cand = None
+    min_rmax = conf.round_rmax(eps, conf.min_delta)
+    state = cand = None
     round_i = 0
     while True:
-        rmax = eps * math.sqrt(delta / 3.0 / m / math.log(2.0 / pfail))
-        rmax *= math.sqrt(m * rmax) * 3.0
-        omega = (eps + 2.0) * math.log(2.0 / pfail) / eps / eps / delta
-        state, cand = _forward_push_topk_state(
-            graph, source, rmax, min_rmax, alpha, 10_000,
-            init_state=state, init_cand=cand,
+        state, cand = push_round(
+            graph, source, conf.round_rmax(eps, delta), min_rmax, alpha, 10_000,
+            state=state, cand=cand,
         )
-        state = state.localCheckpoint(eager=True)
+        omega = conf.round_omega(eps, delta)
 
         rsum = state.agg(F.sum("residue")).collect()[0][0] or 0.0
         rsum_rw = rsum * (1.0 - alpha)

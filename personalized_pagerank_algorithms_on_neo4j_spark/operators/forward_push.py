@@ -9,11 +9,19 @@ r > 0 and (out == 0 or r/out >= rmax) pushes simultaneously. Same fixed point
 instead of one per queue pop — the only schedule that makes sense on a
 cluster.
 
+One distributed loop, ``push_round``, serves every caller. It is the
+two-threshold resumable push (I2): each superstep re-qualifies only the
+active set (the nodes the previous superstep updated), and a round hands its
+state and candidate frontier to the next, tighter round. The whole-graph push
+is a single fresh round with ``min_rmax = rmax``; FORA whole-graph runs its
+rmax halvings as rounds, FORA top-k its delta rounds (operators/fora.py).
+
 Quirk reproduced: the reference's enqueue test `r(u)/out(u) >= rmax` evaluates
 to +inf for out-degree-0 nodes, so dangling nodes *always* qualify once they
 hold residue; their push routes (1-alpha)*r back to the source
 (Forward_Push.java:101-115). An out-degree-0 source short-circuits to
-pi(s,s) = 1 (Forward_Push.java:72-76).
+pi(s,s) = 1 (Forward_Push.java:72-76); each caller checks this once per query
+(``source_is_dangling``), before its first round.
 """
 
 from __future__ import annotations
@@ -48,41 +56,28 @@ def forward_push(
     max_supersteps: int = 10_000,
 ) -> DataFrame:
     """Whole-graph SSPPR via local push. Returns DataFrame(node, ppr)."""
-    if mode == "auto":
-        mode = "local" if graph.fits_local() else "distributed"
-    if mode == "local":
+    if graph.resolve_mode(mode) == "local":
         lg = graph.local
         pi, _, _ = _kernels.forward_push_batch(
             lg, lg.dense(source), alpha, rmax, max_supersteps=max_supersteps
         )
         return ppr_result_from_dense(graph, pi)
-    state = _forward_push_distributed_state(graph, source, rmax, alpha, max_supersteps)
+    if source_is_dangling(graph, source):
+        return dangling_source_result(graph, source)
+    state, _ = push_round(graph, source, rmax, rmax, alpha, max_supersteps)
     return ppr_result_from_state(state)
 
 
-def _forward_push_distributed_state(
-    graph: PropertyGraph,
-    source: int,
-    rmax: float,
-    alpha: float,
-    max_supersteps: int,
-    init_state: DataFrame | None = None,
-) -> DataFrame:
-    """Batch push loop; returns the full (node, residue, reserve) state.
+def source_is_dangling(graph: PropertyGraph, source: int) -> bool:
+    """Whether ``source`` has out-degree 0 (one Spark job): its PPR is then
+    the single row (source, 1.0) and no push runs."""
+    row = graph.degrees.where(F.col("node") == int(source)).select("out_degree").take(1)
+    return not row or row[0][0] == 0
 
-    ``init_state`` resumes a previous push at a tighter rmax (the resumable
-    I2 variant, Forward_Push.java:144-250 — the batch schedule needs no
-    carried queue: the new threshold re-qualifies nodes directly).
-    """
-    spark = graph.spark
-    src_out = (
-        graph.degrees.where(F.col("node") == int(source)).select("out_degree").take(1)
-    )
-    if not src_out or src_out[0][0] == 0:
-        return spark.createDataFrame(
-            [(int(source), 0.0, 1.0)], schema="node long, residue double, reserve double"
-        )
-    return _push_loop(graph, source, rmax, alpha, max_supersteps, init_state)
+
+def dangling_source_result(graph: PropertyGraph, source: int) -> DataFrame:
+    """pi(s, s) = 1 for an out-degree-0 source (Forward_Push.java:72-76)."""
+    return graph.spark.createDataFrame([(int(source), 1.0)], schema="node long, ppr double")
 
 
 def _qual_expr(rmax: float):
@@ -93,28 +88,32 @@ def _qual_expr(rmax: float):
     )
 
 
-def _superstep_branches(
+def _superstep_rows(
     frontier: DataFrame,
     edges: DataFrame,
+    out_deg: DataFrame,
     source: int,
     alpha: float,
-    hint_broadcast: bool = False,
-) -> tuple[DataFrame, DataFrame, DataFrame]:
-    """The three outputs of one batch push over a qualified frontier
-    (node, residue, reserve, od): `kept` banks alpha*r into reserve and zeroes
-    residue; `pushed` fans (1-alpha)*r/out to out-neighbors; `dangling` routes
-    the out-degree-0 nodes' (1-alpha)*r back to the source as one row.
-    Shared verbatim by the whole-graph and resumable-top-k loops so push
-    semantics can only be changed in one place.
+    hint_broadcast: bool,
+) -> DataFrame:
+    """The rows one batch push over a qualified frontier
+    (node, residue, reserve, od) adds to the state, as
+    (node, residue, reserve, od, active): `kept` banks alpha*r into reserve
+    and zeroes residue; `pushed` fans (1-alpha)*r/out to out-neighbors;
+    `dangling` routes the out-degree-0 nodes' (1-alpha)*r back to the source
+    as one row. Pushed and dangling rows are the updates, so they are marked
+    active and take their node's out-degree from ``out_deg``.
 
     `hint_broadcast` applies `F.broadcast` ONLY to the join input of the
-    `pushed` branch — hinting the whole frontier (as before r5) orphaned the
-    hint on the select/aggregate branches, logging two HintErrorLogger
-    warnings per superstep."""
+    `pushed` branch — hinting the whole frontier orphaned the hint on the
+    select/aggregate branches, logging two HintErrorLogger warnings per
+    superstep."""
     kept = frontier.select(
         "node",
         F.lit(0.0).alias("residue"),
         (F.col("reserve") + F.lit(alpha) * F.col("residue")).alias("reserve"),
+        "od",
+        F.lit(False).alias("active"),
     )
     push_in = frontier.where(F.col("od") > 0)
     if hint_broadcast:
@@ -127,7 +126,6 @@ def _superstep_branches(
             (F.lit(1.0 - alpha) * F.col("residue") / F.col("src_out_degree")).alias(
                 "residue"
             ),
-            F.lit(0.0).alias("reserve"),
         )
     )
     dangling = (
@@ -136,147 +134,117 @@ def _superstep_branches(
         .select(
             F.lit(int(source)).cast("long").alias("node"),
             F.coalesce("residue", F.lit(0.0)).alias("residue"),
-            F.lit(0.0).alias("reserve"),
         )
     )
-    return kept, pushed, dangling
-
-
-def _merge_state(rest: DataFrame, *branches: DataFrame) -> DataFrame:
-    """Sum-merge untouched rows with the superstep branch outputs."""
-    merged = rest
-    for b in branches:
-        merged = merged.unionAll(b)
-    return merged.groupBy("node").agg(
-        F.sum("residue").alias("residue"), F.sum("reserve").alias("reserve")
+    updates = pushed.unionAll(dangling).join(out_deg, "node", "left").select(
+        "node",
+        "residue",
+        F.lit(0.0).alias("reserve"),
+        F.coalesce("od", F.lit(0)).alias("od"),
+        F.lit(True).alias("active"),
     )
+    return kept.unionAll(updates)
 
 
-def _push_loop(
-    graph: PropertyGraph,
-    source: int,
-    rmax: float,
-    alpha: float,
-    max_supersteps: int,
-    init_state: DataFrame | None,
-) -> DataFrame:
-    spark = graph.spark
-
-    edges = graph.edges_deg
-    # the CACHED degrees table, not `out_degrees`: the latter is an uncached
-    # aggregation, so joining it per superstep re-runs the edge groupBy
-    # shuffle every iteration
-    out_deg = graph.degrees.select("node", "out_degree")
-    state = init_state if init_state is not None else spark.createDataFrame(
-        [(int(source), 1.0, 0.0)], schema="node long, residue double, reserve double"
-    )
-    small = graph.n <= BROADCAST_NODE_BOUND
-    loop_parts = loop_shuffle_partitions(spark, graph.n) if small else None
-    # the per-superstep localCheckpoint on `s` below already truncates lineage
-    with static_superstep_plan(spark, shuffle_partitions=loop_parts):
-        for _ in range(max_supersteps):
-            s = state.join(out_deg, "node", "left").select(
-                "node", "residue", "reserve",
-                F.coalesce("out_degree", F.lit(0)).alias("od"),
-            )
-            s = s.withColumn("qual", _qual_expr(rmax))
-            s = s.localCheckpoint(eager=True)  # frontier reused by 4 branches below
-            frontier = s.where("qual")
-            if frontier.isEmpty():
-                return s.select("node", "residue", "reserve")
-            rest = s.where(~F.col("qual")).select("node", "residue", "reserve")
-            kept, pushed, dangling = _superstep_branches(
-                frontier, edges, source, alpha, hint_broadcast=small
-            )
-            state = _merge_state(rest, kept, pushed, dangling)
-    return state
-
-
-def _forward_push_topk_state(
+def push_round(
     graph: PropertyGraph,
     source: int,
     rmax: float,
     min_rmax: float,
     alpha: float,
     max_supersteps: int,
-    init_state: DataFrame | None = None,
-    init_cand: DataFrame | None = None,
+    state: DataFrame | None = None,
+    cand: DataFrame | None = None,
 ) -> tuple[DataFrame, DataFrame]:
-    """Resumable two-threshold push (I2, Forward_Push.java:144-250).
+    """One round of the two-threshold resumable push (I2,
+    Forward_Push.java:144-250): supersteps at ``rmax`` until no node
+    qualifies. The source must have out-degree > 0 (``source_is_dangling``).
 
-    Batch analogue of the reference's (Q, Q_next) queue pair: each superstep
-    re-qualifies ONLY the active set — the candidate frontier carried from the
-    previous round (`init_cand`, nodes that reached r/out >= min_rmax), then
-    the nodes updated by the previous superstep — never the whole state. A
-    node outside the active set cannot newly qualify (its residue is
-    unchanged), so the fixed point is identical to the full re-scan while the
-    per-superstep qualification input shrinks to O(|frontier| + |updates|).
+    Batch analogue of the reference's (Q, Q_next) queue pair: only ACTIVE
+    nodes are qualified — at the round's start the candidate frontier carried
+    from the previous round (``cand``, nodes that reached r/out >= min_rmax),
+    then the nodes each superstep updated. A node outside the active set
+    cannot newly qualify (its residue is unchanged), so the fixed point is
+    that of a full re-scan. Each superstep runs two Spark actions: the
+    frontier test on the checkpointed state, and the checkpoint of the merged
+    next state, whose rows carry their out-degree and active/qualified flags
+    so that the superstep joins the degree table and expands the frontier's
+    edges once each.
 
-    Returns (state, next_cand). `next_cand` accumulates every active node
-    observed at r/out in [min_rmax, rmax) — like the reference's Q_next it may
-    retain nodes whose residue was later pushed out (Forward_Push.java never
-    removes from Q_next); stale entries are harmless because every carried
-    candidate is re-qualified against the live state at the next round's
-    first superstep.
+    ``state``/``cand`` resume the previous round (``cand`` as returned: one
+    row per node); omitted, the round starts fresh from residue 1 at the
+    source. Returns (state, next_cand), the state being the full
+    (node, residue, reserve) table. ``next_cand`` accumulates every active
+    node observed at r/out in [min_rmax, rmax) — like the reference's Q_next
+    it may retain nodes whose residue was later pushed out
+    (Forward_Push.java never removes from Q_next); stale entries are harmless
+    because every carried candidate is re-qualified against the live state at
+    the next round's start. With ``min_rmax >= rmax`` that interval is
+    empty: ``next_cand`` is an empty frame and costs no Spark job.
     """
     spark = graph.spark
-    src_out = (
-        graph.degrees.where(F.col("node") == int(source)).select("out_degree").take(1)
-    )
-    empty_cand = spark.createDataFrame([], "node long")
-    if not src_out or src_out[0][0] == 0:
-        # out-degree-0 source short-circuit (Forward_Push.java:149-153)
-        state = spark.createDataFrame(
-            [(int(source), 0.0, 1.0)], schema="node long, residue double, reserve double"
-        )
-        return state, empty_cand
-
     edges = graph.edges_deg
-    out_deg = graph.degrees.select("node", "out_degree")  # cached (see _push_loop)
-    state = init_state if init_state is not None else spark.createDataFrame(
-        [(int(source), 1.0, 0.0)], schema="node long, residue double, reserve double"
+    # the CACHED degrees table, not `out_degrees`: the latter is an uncached
+    # aggregation, so joining it per superstep re-runs the edge groupBy
+    # shuffle every iteration
+    out_deg = graph.degrees.select("node", F.col("out_degree").alias("od"))
+    if state is None:
+        state = spark.createDataFrame(
+            [(int(source), 1.0, 0.0)], schema="node long, residue double, reserve double"
+        )
+        cand = spark.createDataFrame([(int(source),)], "node long")
+    track = min_rmax < rmax
+    # demoted to Q_next: alive but under this round's rmax
+    # (Forward_Push.java:243-249)
+    demoted = (
+        F.col("active")
+        & ~F.col("qual")
+        & (F.col("residue") > 0)
+        & (F.col("residue") >= F.lit(min_rmax) * F.col("od"))
     )
-    active = init_cand if init_cand is not None else spark.createDataFrame(
-        [(int(source),)], "node long"
-    )
-    next_cand = empty_cand
+
+    def checked(rows: DataFrame) -> DataFrame:
+        return rows.withColumn(
+            "qual", F.col("active") & _qual_expr(rmax)
+        ).localCheckpoint(eager=True)
+
+    next_cand = spark.createDataFrame([], "node long")
     small = graph.n <= BROADCAST_NODE_BOUND
     loop_parts = loop_shuffle_partitions(spark, graph.n) if small else None
     with static_superstep_plan(spark, shuffle_partitions=loop_parts):
+        state = checked(
+            state.select("node", "residue", "reserve")
+            .join(out_deg, "node", "left")
+            .join(cand.select("node", F.lit(True).alias("active")), "node", "left")
+            .select(
+                "node",
+                "residue",
+                "reserve",
+                F.coalesce("od", F.lit(0)).alias("od"),
+                F.coalesce("active", F.lit(False)).alias("active"),
+            )
+        )
         for _ in range(max_supersteps):
-            act = (
-                active.select("node")
-                .join(state, "node")
-                .join(out_deg, "node", "left")
-                .select(
-                    "node",
-                    "residue",
-                    "reserve",
-                    F.coalesce("out_degree", F.lit(0)).alias("od"),
-                )
-            )
-            act = act.withColumn("qual", _qual_expr(rmax)).localCheckpoint(eager=True)
-            # demoted to Q_next: alive but under this round's rmax
-            # (Forward_Push.java:243-249)
-            next_cand = next_cand.unionAll(
-                act.where(
-                    ~F.col("qual")
-                    & (F.col("residue") > 0)
-                    & (F.col("residue") >= F.lit(min_rmax) * F.col("od"))
-                ).select("node")
-            )
-            frontier = act.where("qual")
+            if track:
+                next_cand = next_cand.unionAll(state.where(demoted).select("node"))
+            frontier = state.where("qual")
             if frontier.isEmpty():
                 break
-            kept, pushed, dangling = _superstep_branches(
-                frontier, edges, source, alpha, hint_broadcast=small
+            rows = _superstep_rows(
+                frontier, edges, out_deg, source, alpha, hint_broadcast=small
             )
-            rest = state.join(frontier.select("node"), "node", "left_anti")
-            state = _merge_state(rest, kept, pushed, dangling).localCheckpoint(
-                eager=True
+            state = checked(
+                state.where(~F.col("qual"))
+                .select("node", "residue", "reserve", "od", F.lit(False).alias("active"))
+                .unionAll(rows)
+                .groupBy("node")
+                .agg(
+                    F.sum("residue").alias("residue"),
+                    F.sum("reserve").alias("reserve"),
+                    F.max("od").alias("od"),
+                    F.max("active").alias("active"),
+                )
             )
-            # only updated nodes can newly qualify next superstep
-            active = (
-                pushed.select("node").unionAll(dangling.select("node")).distinct()
-            )
-        return state, next_cand.distinct().localCheckpoint(eager=True)
+        if track:
+            next_cand = next_cand.distinct().localCheckpoint(eager=True)
+    return state.select("node", "residue", "reserve"), next_cand

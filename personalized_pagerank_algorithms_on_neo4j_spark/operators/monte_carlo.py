@@ -323,9 +323,7 @@ def monte_carlo(
     """Whole-graph MC PPR. Returns DataFrame(node, ppr)."""
     conf = WholeGraphConf(alpha=alpha, n=graph.n, m=graph.m)
     omega = conf.mc_omega(epsilon)
-    if mode == "auto":
-        mode = "local" if graph.fits_local() else "distributed"
-    if mode == "local":
+    if graph.resolve_mode(mode) == "local":
         lg = graph.local
         rng = np.random.default_rng(seed)
         pi = _kernels.monte_carlo(lg, lg.dense(source), alpha, omega, rng)

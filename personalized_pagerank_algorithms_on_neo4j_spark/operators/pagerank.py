@@ -36,9 +36,7 @@ def personalized_pagerank(
     alpha: float = DEFAULT_ALPHA,
     mode: str = "auto",
 ) -> DataFrame:
-    if mode == "auto":
-        mode = "local" if graph.fits_local() else "distributed"
-    if mode == "local":
+    if graph.resolve_mode(mode) == "local":
         lg = graph.local
         pi = _kernels.personalized_pagerank(lg, lg.dense(source), alpha, iterations)
         return ppr_result_from_dense(graph, pi)
@@ -62,9 +60,7 @@ def pagerank_global(
     each superstep against the cached pre-partitioned edge table; the
     restart vector is derived once from the node table and checkpointed.
     """
-    if mode == "auto":
-        mode = "local" if graph.fits_local() else "distributed"
-    if mode == "local":
+    if graph.resolve_mode(mode) == "local":
         import pandas as pd
 
         lg = graph.local

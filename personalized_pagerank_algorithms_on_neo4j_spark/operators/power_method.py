@@ -33,9 +33,7 @@ def power_method(
     mode: str = "auto",
 ) -> DataFrame:
     """Returns DataFrame(node: long, ppr: double), only rows with ppr > 0."""
-    if mode == "auto":
-        mode = "local" if graph.fits_local() else "distributed"
-    if mode == "local":
+    if graph.resolve_mode(mode) == "local":
         lg = graph.local
         pi = _kernels.power_method(lg, lg.dense(source), alpha, iterations)
         return ppr_result_from_dense(graph, pi)
@@ -110,9 +108,7 @@ def power_method_multi(
     sources = sorted(set(int(x) for x in sources))
     if not sources:
         raise ValueError("sources is empty")
-    if mode == "auto":
-        mode = "local" if graph.fits_local() else "distributed"
-    if mode == "local":
+    if graph.resolve_mode(mode) == "local":
         lg = graph.local
         pi = _kernels.power_method_multi(
             lg, [lg.dense(s) for s in sources], alpha, iterations

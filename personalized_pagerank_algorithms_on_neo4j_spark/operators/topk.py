@@ -34,11 +34,6 @@ def retrieve_topk(df: DataFrame, k: int, value_col: str = "ppr") -> DataFrame:
     return df.where(F.col(value_col) >= F.lit(kth))
 
 
-def topk_sorted(df: DataFrame, k: int, value_col: str = "ppr") -> DataFrame:
-    """Tie-set sorted descending with a dense position column (T5/T6)."""
-    return retrieve_topk(df, k, value_col).orderBy(F.desc(value_col))
-
-
 def print_limit(df: DataFrame, k: int, value_col: str = "ppr") -> DataFrame:
     """First k rows of the (possibly larger) tie-set (T4)."""
     return df.orderBy(F.desc(value_col)).limit(k)

@@ -485,24 +485,24 @@ def test_distributed_plan_shape(got):
 def test_two_threshold_push_matches_full_rescan(got):
     """I2: the two-threshold resumable push (active-set supersteps, carried
     candidate frontier) must reach the SAME fixed point as the full-state
-    re-scan resume at an identical rmax schedule, while re-qualifying far
+    re-scan resume at an identical rmax schedule — the local batch kernel,
+    which re-qualifies every node each superstep — while re-qualifying far
     fewer nodes between rounds."""
+    lg = got.local
     s = got.id_of("Eddard")
     rmax1, rmax2 = 5e-3, 1e-3
     min_rmax = 1e-4
 
     # reference behavior: full re-scan resume (re-qualifies the whole state)
-    full1 = forward_push._forward_push_distributed_state(got, s, rmax1, ALPHA, 10_000)
-    full2 = forward_push._forward_push_distributed_state(
-        got, s, rmax2, ALPHA, 10_000, init_state=full1
+    pi1, r1, _ = _kernels.forward_push_batch(lg, lg.dense(s), ALPHA, rmax1)
+    pi2, r2, _ = _kernels.forward_push_batch(
+        lg, lg.dense(s), ALPHA, rmax2, reserve=pi1, residue=r1
     )
 
     # two-threshold: round 1 hands (state, candidate frontier) to round 2
-    st1, cand1 = forward_push._forward_push_topk_state(
-        got, s, rmax1, min_rmax, ALPHA, 10_000
-    )
-    st2, cand2 = forward_push._forward_push_topk_state(
-        got, s, rmax2, min_rmax, ALPHA, 10_000, init_state=st1, init_cand=cand1
+    st1, cand1 = forward_push.push_round(got, s, rmax1, min_rmax, ALPHA, 10_000)
+    st2, cand2 = forward_push.push_round(
+        got, s, rmax2, min_rmax, ALPHA, 10_000, state=st1, cand=cand1
     )
 
     def as_map(df):
@@ -512,7 +512,11 @@ def test_two_threshold_push_matches_full_rescan(got):
             if r["residue"] != 0.0 or r["reserve"] != 0.0
         }
 
-    a, b = as_map(full2), as_map(st2)
+    a = {
+        int(lg.ids[i]): (r2[i], pi2[i])
+        for i in np.flatnonzero((r2 != 0.0) | (pi2 != 0.0))
+    }
+    b = as_map(st2)
     assert set(a) == set(b)
     for node, (res, rese) in a.items():
         assert abs(res - b[node][0]) < 1e-12, node
