@@ -503,15 +503,13 @@ def main() -> None:
     timed("q_wl_colors", lambda: E.q_graph_wl_colors(spark, SF_DIR).count())
 
     # counted-walk distributed MC (state bounded by active nodes, not
-    # omega): 10 heavy supersteps + ONE exact tail-drain pass — the full
-    # untruncated endpoint distribution (on_budget="drain" finishes the
-    # geometric tail against the broadcast CSR in a single job; a plain
-    # superstep drain is ~90 near-empty supersteps = 48.7 s at sf0.1)
+    # omega): 10 supersteps, then the walks still live force-stop at their
+    # current node (a full superstep drain is ~90 near-empty supersteps)
     timed(
         "q_mc_dist10",
         lambda: eng.ppr(
             src, algo="montecarlo", epsilon=0.5, mode="distributed",
-            max_supersteps=10, on_budget="drain",
+            max_supersteps=10,
         ).count(),
     )
     # multi-source personalization through the DISTRIBUTED superstep loop

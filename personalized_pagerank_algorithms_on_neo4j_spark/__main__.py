@@ -15,6 +15,7 @@ import json
 
 from . import PPREngine, build_spark, load_csv_graph, load_tpch_graph
 from .bench_driver import algo_perf_batch_test
+from .engine import ALGO_PARAMS
 
 
 def main() -> None:
@@ -46,7 +47,10 @@ def main() -> None:
     eng = PPREngine(graph, alpha=args.alpha)
     if args.single is not None:
         source = int(args.single) if args.single.isdigit() else args.single
-        df = eng.ppr(source, algo=args.algo, epsilon=args.epsilon)
+        # pass --epsilon / --seed only to the algorithms that take them
+        given = {"epsilon": args.epsilon, "seed": args.seed}
+        takes = ALGO_PARAMS.get(args.algo, set())
+        df = eng.ppr(source, algo=args.algo, **{p: v for p, v in given.items() if p in takes})
         eng.with_names(df).show(args.k, truncate=False)
     else:
         rows = algo_perf_batch_test(

@@ -36,6 +36,24 @@ ALGOS = (
     "base",  # all-pair prep lookup (I7)
 )
 
+# The keyword parameters each algorithm takes; any other raises TypeError.
+ALGO_PARAMS = {
+    "power": {"iterations"},
+    "fwdpush": {"rmax", "epsilon", "max_supersteps"},
+    "montecarlo": {"epsilon", "seed", "max_supersteps"},
+    "fora": {"epsilon", "seed", "push_halvings"},
+    "fora_topk": {"epsilon", "seed"},
+    "backward": {"rmax"},
+    "pagerank": {"iterations"},
+    "base": {"prep_path"},
+}
+
+
+def _check_params(algo: str, params: dict) -> None:
+    unknown = sorted(set(params) - ALGO_PARAMS.get(algo, set()))
+    if unknown:
+        raise TypeError(f"algo {algo!r} takes no parameter {', '.join(unknown)}")
+
 
 class PPREngine:
     def __init__(self, graph: PropertyGraph, alpha: float = DEFAULT_ALPHA):
@@ -69,6 +87,9 @@ class PPREngine:
         **params,
     ) -> DataFrame:
         """Single-source PPR -> DataFrame(node, ppr), descending not implied."""
+        if algo == "fora_topk" or algo not in ALGOS:
+            raise ValueError(f"unknown algo {algo!r}; one of {ALGOS}")
+        _check_params(algo, params)
         s = self._resolve(source)
         g, a = self.graph, self.alpha
         if algo == "power":
@@ -82,7 +103,6 @@ class PPREngine:
                 g, s, epsilon=params.get("epsilon", DEFAULT_EPSILON), alpha=a,
                 mode=mode, seed=params.get("seed", 42),
                 max_supersteps=params.get("max_supersteps", 1_000),
-                on_budget=params.get("on_budget", "stop"),
             )
         if algo == "fora":
             return fora.fora_whole_graph(
@@ -98,9 +118,7 @@ class PPREngine:
             return pagerank.personalized_pagerank(
                 g, s, iterations=params.get("iterations", 100), alpha=a, mode=mode
             )
-        if algo == "base":
-            return base_all_pair.base_lookup(g, params["prep_path"], s)
-        raise ValueError(f"unknown algo {algo!r}; one of {ALGOS}")
+        return base_all_pair.base_lookup(g, params["prep_path"], s)
 
     # -- top-k ----------------------------------------------------------------
     def topk(
@@ -108,6 +126,8 @@ class PPREngine:
     ) -> DataFrame:
         """Tie-aware top-k (result may exceed k rows, reference T3 semantics)."""
         s = self._resolve(source)
+        if algo in ("fora_topk", "base"):
+            _check_params(algo, params)
         if algo == "fora_topk":
             full = fora.fora_topk(
                 self.graph, s, k, epsilon=params.get("epsilon", DEFAULT_EPSILON),

@@ -10,9 +10,11 @@ snapshot. The Spark-native equivalent is a pair of cached DataFrames
   out-degree (every push/walk weights by 1/out(src)); hash-partitioned by the
   join key and persisted so each superstep's join only shuffles the (small)
   state side, never the edge table.
-- ``adj(node, neighbors, out_degree)``      — array adjacency for O(1) random
-  neighbor selection (`element_at(neighbors, 1+floor(rand()*out_degree))`),
-  the columnar analogue of HeavyGraph's ragged arrays.
+- ``adj(node, neighbors, out_degree)``      — array adjacency, the columnar
+  analogue of HeavyGraph's ragged arrays: the counted-walk superstep
+  (operators/monte_carlo.py) joins it onto its walk rows and picks neighbors
+  by position with hashed (step, start, cur) draws, not ``rand()``, so walks
+  do not depend on the partition layout.
 
 ``LocalGraph`` is the driver-side CSR snapshot used when the graph fits on the
 driver (config.LOCAL_EDGE_THRESHOLD edges, analogous to a broadcast-join
@@ -134,12 +136,6 @@ class PropertyGraph:
     def out_degrees(self) -> DataFrame:
         return self.edges.groupBy(F.col("src").alias("node")).agg(
             F.count(F.lit(1)).alias("out_degree")
-        )
-
-    @cached_property
-    def in_degrees(self) -> DataFrame:
-        return self.edges.groupBy(F.col("dst").alias("node")).agg(
-            F.count(F.lit(1)).alias("in_degree")
         )
 
     @cached_property

@@ -24,7 +24,7 @@ from collections import deque
 
 import numpy as np
 
-from ..config import TopkConf
+from ..config import TopkConf, WholeGraphConf
 from ..graph import LocalGraph
 
 # ---------------------------------------------------------------------------
@@ -321,8 +321,6 @@ def fora_whole_graph(
     s: int,
     alpha: float,
     epsilon: float,
-    delta: float,
-    pfail: float,
     m: int,
     rng: np.random.Generator,
     push_halvings: int = 2,
@@ -330,12 +328,9 @@ def fora_whole_graph(
     """FORA: forward push at rmax (halved ``push_halvings`` times — a
     deterministic budget replacing the reference's 400 ns wall-clock cost
     model, Fora_Whole_Graph.java:75-79), then compensating random walks."""
-    rmax = (
-        epsilon
-        * np.sqrt(delta / 3.0 / m / np.log(2.0 / pfail))
-        / (1.0 - alpha)
-    )
-    omega = (epsilon + 2.0) * np.log(2.0 / pfail) / epsilon / epsilon / delta
+    conf = WholeGraphConf(alpha=alpha, n=lg.n, m=m)
+    rmax = conf.fora_rmax(epsilon)
+    omega = conf.fora_omega(epsilon)
     pi, r, _ = forward_push_batch(lg, s, alpha, rmax)
     for _ in range(push_halvings):
         rmax /= 2.0

@@ -25,7 +25,10 @@ Distributed mode: both variants push through the one two-threshold loop,
 ``forward_push.push_round`` — whole-graph runs one round per rmax halving,
 top-k one per delta round — carrying the state and candidate frontier
 between rounds, with the floor ``min_rmax`` set to the last round's rmax. An
-out-degree-0 source is checked once per query, before the first round.
+out-degree-0 source is checked once per query, before the first round. Both
+then run the one compensating-walk phase, ``_walk_phase`` (the twin of
+``_kernels._fora_walk_phase``), as counted walks through
+``monte_carlo.run_walks_counted``.
 """
 
 from __future__ import annotations
@@ -37,6 +40,7 @@ from pyspark.sql import functions as F
 from ..config import DEFAULT_ALPHA, DEFAULT_EPSILON, TopkConf, WholeGraphConf
 from ..graph import PropertyGraph
 from . import _kernels
+from . import topk as topk_ops
 from ._result import ppr_result_from_dense
 from .forward_push import dangling_source_result, push_round, source_is_dangling
 from .monte_carlo import run_walks_counted
@@ -51,25 +55,14 @@ def fora_whole_graph(
     seed: int | None = 42,
     push_halvings: int = 2,
 ) -> DataFrame:
-    conf = WholeGraphConf(alpha=alpha, n=graph.n, m=graph.m)
     if graph.resolve_mode(mode) == "local":
         lg = graph.local
         rng = np.random.default_rng(seed)
         pi = _kernels.fora_whole_graph(
-            lg,
-            lg.dense(source),
-            alpha,
-            epsilon,
-            conf.delta,
-            conf.pfail,
-            graph.m,
-            rng,
-            push_halvings=push_halvings,
+            lg, lg.dense(source), alpha, epsilon, graph.m, rng, push_halvings=push_halvings
         )
         return ppr_result_from_dense(graph, pi)
-    return _fora_whole_graph_distributed(
-        graph, source, epsilon, alpha, conf, seed, push_halvings
-    )
+    return _fora_whole_graph_distributed(graph, source, epsilon, alpha, seed, push_halvings)
 
 
 def _fora_whole_graph_distributed(
@@ -77,13 +70,13 @@ def _fora_whole_graph_distributed(
     source: int,
     epsilon: float,
     alpha: float,
-    conf: WholeGraphConf,
     seed: int | None,
     push_halvings: int,
 ) -> DataFrame:
     # out-degree-0 source short-circuits to pi(s,s)=1 (Forward_Push.java:72-76)
     if source_is_dangling(graph, source):
         return dangling_source_result(graph, source)
+    conf = WholeGraphConf(alpha=alpha, n=graph.n, m=graph.m)
     omega = conf.fora_omega(epsilon)
     rmaxes = [conf.fora_rmax(epsilon)]
     for _ in range(push_halvings):
@@ -94,32 +87,65 @@ def _fora_whole_graph_distributed(
             graph, source, rmax, rmaxes[-1], alpha, 10_000, state=state, cand=cand
         )
 
-    rsum = state.agg(F.sum("residue")).collect()[0][0] or 0.0
-    rsum_local = rsum * (1.0 - alpha)
-    num_walks = float(int(omega * rsum_local))
-
     # alpha extraction: every residue node banks alpha*r into reserve
     reserve = state.select(
         "node", (F.col("reserve") + F.lit(alpha) * F.col("residue")).alias("ppr")
     )
-    if num_walks <= 0 or rsum_local <= 0:
-        return reserve.where(F.col("ppr") > 0)
+    pi = _walk_phase(graph, state, reserve, omega, alpha, zero_hop=False, seed=seed)
+    return pi.where(F.col("ppr") > 0)
 
-    residue = state.where(F.col("residue") > 0).select(
-        "node", (F.col("residue") * F.lit(1.0 - alpha)).alias("r")
+
+def _walk_phase(
+    graph: PropertyGraph,
+    state: DataFrame,
+    pi: DataFrame,
+    omega: float,
+    alpha: float,
+    zero_hop: bool,
+    seed: int | None,
+) -> DataFrame:
+    """The compensating-walk phase both FORA variants run after their push:
+    the distributed twin of ``_kernels._fora_walk_phase``. Adds the walk
+    increments to ``pi`` (node, ppr); ``pi`` comes back as is when no walk
+    is launched.
+
+    ``num_walks`` = (long)(omega * rsum * (1-alpha)) (Fora_Whole_Graph.java:114,
+    Fora_Topk.java:154). Each residue node launches
+    omega_i = ceil(r / rsum_scale * num_walks) walks, and every endpoint
+    receives r / omega_i per walk — the algebraic simplification of
+    a_i / num_walks * rsum_scale with a_i = r / rsum_scale * num_walks / omega_i.
+    Top-k (``zero_hop=True``, Fora_Topk.java:151-168): the walks carry
+    r = residue with rsum_scale = 1. Whole-graph (``zero_hop=False``,
+    Fora_Whole_Graph.java:116-140): the caller has banked the alpha*residue
+    share a zero-hop walk would stop on at its start, so the walks carry
+    r = (1-alpha)*residue with rsum_scale = rsum*(1-alpha) and take one
+    unconditional first step.
+
+    COUNTED fan-out: one walk row per residue node instead of omega_i
+    replicated rows; the per-start weight is constant per start, so it
+    joins back onto the counted endpoints.
+    """
+    rsum = state.agg(F.sum("residue")).collect()[0][0] or 0.0
+    rsum_rw = rsum * (1.0 - alpha)
+    num_walks = float(int(omega * rsum_rw))
+    if num_walks <= 0:
+        return pi
+    if zero_hop:
+        r, rsum_scale = F.col("residue"), 1.0
+    else:
+        r, rsum_scale = F.col("residue") * F.lit(1.0 - alpha), rsum_rw
+    fan = (
+        state.where(F.col("residue") > 0)
+        .select("node", r.alias("r"))
+        .select(
+            "node",
+            "r",
+            F.ceil(F.col("r") / F.lit(rsum_scale) * F.lit(num_walks))
+            .cast("long")
+            .alias("omega_i"),
+        )
+        .where(F.col("omega_i") > 0)
     )
-    fan = residue.select(
-        "node",
-        "r",
-        F.ceil(F.col("r") / F.lit(rsum_local) * F.lit(num_walks)).cast("long").alias(
-            "omega_i"
-        ),
-    ).where(F.col("omega_i") > 0)
-    # incr = a_i / num_walks * rsum = r_i / omega_i  (algebraic simplification
-    # of Fora_Whole_Graph.java:132-134: a_i = (r_i/rsum*num)/omega_i).
-    # COUNTED fan-out: one row per residue node instead of omega_i
-    # replicated walk rows; per-start weights join back onto the counted
-    # endpoints (weight is constant per start by construction).
     walks = fan.select(
         F.col("node").alias("start"),
         F.col("node").alias("cur"),
@@ -128,18 +154,13 @@ def _fora_whole_graph_distributed(
     incr = fan.select(
         F.col("node").alias("start"), (F.col("r") / F.col("omega_i")).alias("incr")
     )
-    ends = run_walks_counted(graph, walks, alpha, zero_hop=False, seed=seed)
+    ends = run_walks_counted(graph, walks, alpha, zero_hop=zero_hop, seed=seed)
     walk_ppr = (
         ends.join(incr, "start")
         .groupBy(F.col("cur").alias("node"))
         .agg(F.sum(F.col("cnt") * F.col("incr")).alias("ppr"))
     )
-    return (
-        reserve.unionAll(walk_ppr)
-        .groupBy("node")
-        .agg(F.sum("ppr").alias("ppr"))
-        .where(F.col("ppr") > 0)
-    )
+    return pi.unionAll(walk_ppr).groupBy("node").agg(F.sum("ppr").alias("ppr"))
 
 
 def fora_topk(
@@ -197,48 +218,15 @@ def _fora_topk_distributed(
             graph, source, conf.round_rmax(eps, delta), min_rmax, alpha, 10_000,
             state=state, cand=cand,
         )
-        omega = conf.round_omega(eps, delta)
-
-        rsum = state.agg(F.sum("residue")).collect()[0][0] or 0.0
-        rsum_rw = rsum * (1.0 - alpha)
-        num_walks = float(int(omega * rsum_rw))
-
-        pi = state.select("node", F.col("reserve").alias("ppr"))
-        if num_walks > 0:
-            fan = (
-                state.where(F.col("residue") > 0)
-                .select(
-                    "node",
-                    F.col("residue").alias("r"),
-                    F.ceil(F.col("residue") * F.lit(num_walks)).cast("long").alias(
-                        "omega_i"
-                    ),
-                )
-                .where(F.col("omega_i") > 0)
-            )
-            walks = fan.select(
-                F.col("node").alias("start"),
-                F.col("node").alias("cur"),
-                F.col("omega_i").alias("cnt"),
-            )
-            incr = fan.select(
-                F.col("node").alias("start"),
-                (F.col("r") / F.col("omega_i")).alias("incr"),
-            )
-            ends = run_walks_counted(
-                graph, walks, alpha, zero_hop=True,
-                seed=None if seed is None else seed + round_i,
-            )
-            walk_ppr = (
-                ends.join(incr, "start")
-                .groupBy(F.col("cur").alias("node"))
-                .agg(F.sum(F.col("cnt") * F.col("incr")).alias("ppr"))
-            )
-            pi = pi.unionAll(walk_ppr).groupBy("node").agg(F.sum("ppr").alias("ppr"))
+        pi = _walk_phase(
+            graph, state, state.select("node", F.col("reserve").alias("ppr")),
+            conf.round_omega(eps, delta), alpha, zero_hop=True,
+            seed=None if seed is None else seed + round_i,
+        )
         pi = pi.where(F.col("ppr") > 0).localCheckpoint(eager=True)
 
-        kth_rows = pi.orderBy(F.desc("ppr")).limit(k).collect()
-        kth = kth_rows[-1]["ppr"] if len(kth_rows) >= k else 0.0
+        kth = topk_ops.kth_value(pi, conf.k)
+        kth = 0.0 if kth is None else kth
         if kth >= (1.0 + eps) * delta or delta <= conf.min_delta:
             return pi
         delta = max(conf.min_delta, delta / 4.0)

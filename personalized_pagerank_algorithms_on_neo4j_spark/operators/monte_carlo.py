@@ -19,7 +19,9 @@ fan-out rides the same loop with per-start weights applied to the counted
 endpoints afterward. Per-(step, start, cur) hash seeding makes results
 independent of partition layout (unlike `F.rand`). The superstep count is
 geometric (~ln(omega)/ln(1/(1-alpha)) rounds to drain); the driver probes
-emptiness every 3rd round.
+emptiness every 3rd round. This superstep loop is the only distributed walk
+simulator: walks still live after ``max_supersteps`` force-stop at their
+current node, so endpoint counts always sum to the walk count.
 """
 
 from __future__ import annotations
@@ -73,103 +75,6 @@ def _splitmix64(x, np):
     x = (x ^ (x >> np.uint64(30))) * np.uint64(0xBF58476D1CE4E5B9)
     x = (x ^ (x >> np.uint64(27))) * np.uint64(0x94D049BB133111EB)
     return x ^ (x >> np.uint64(31))
-
-
-def _drain_walks_batch(pdf, base_seed, stop_prob, lg, np, pd):
-    """Finish every live walk of one Arrow batch in-process, vectorized.
-
-    The superstep loop's geometric tail is its cost problem: after step s
-    only ~(1-alpha)^s of the walk mass is live, yet each further superstep
-    is a full Spark job (join + Arrow pass + shuffle + checkpoint) — at
-    local-mode job latency the last ~80 near-empty supersteps cost more
-    than the first 10 heavy ones (measured 48.7 s full drain vs 5.6 s for
-    10 supersteps at sf0.1).  When the graph fits the driver-local CSR
-    bound, the tail is instead finished HERE: walks expand to one numpy
-    row each (the tail is small by construction) and iterate
-    stop-draw/move rounds entirely in memory against the broadcast CSR —
-    one Spark job total.
-
-    Semantics are the superstep kernel's exactly: per round a
-    Bernoulli(alpha) stop at the current node, then movers pick a uniform
-    out-neighbor (dangling movers reset to the walk's START).  Draws hash
-    (base_seed, start, entry-cur, walk-index, round) through splitmix64 —
-    row-content keys, so results are identical under any partition layout
-    or Arrow batch split, like every other draw in this module."""
-    u64 = np.uint64
-    if len(pdf) == 0:
-        return _empty_step_frame(pd, np).drop(columns=["stopped"])
-    start = pdf["start"].to_numpy(np.int64)
-    cur0 = pdf["cur"].to_numpy(np.int64)
-    cnt = pdf["cnt"].to_numpy(np.int64)
-    total = int(cnt.sum())
-    if total == 0:
-        return _empty_step_frame(pd, np).drop(columns=["stopped"])
-
-    row_rep = np.repeat(np.arange(len(pdf), dtype=np.int64), cnt)
-    ws = start[row_rep]
-    ends = np.cumsum(cnt)
-    widx = np.arange(total, dtype=np.int64) - np.repeat(ends - cnt, cnt)
-
-    with np.errstate(over="ignore"):
-        salt = u64((int(base_seed) + 0xBF3D_52A9_37C1_4E0B) % (2**64))
-        mix = _splitmix64(salt ^ ws.view(u64), np)
-        mix = _splitmix64(mix ^ cur0[row_rep].view(u64), np)
-        mix = _splitmix64(mix ^ (u64(0x94D0_49BB_1331_11EB) * widx.view(u64)), np)
-
-        ws_d = np.searchsorted(lg.ids, ws).astype(np.int64)
-        wc = np.searchsorted(lg.ids, cur0)[row_rep].astype(np.int64)
-        alive_idx = np.arange(total, dtype=np.int64)
-        # termination backstop only: P(one of 2M walks survives 48/alpha
-        # alpha-stop rounds) ~ 1e-16; survivors (none in practice) keep
-        # their current node so endpoint mass still sums to the walk count
-        for rnd in range(max(64, int(48.0 / max(stop_prob, 1e-3)))):
-            if len(alive_idx) == 0:
-                break
-            rsalt = u64(((rnd + 1) * 0xD6E8_FEB8_6659_FD93) % (2**64))
-            u = (_splitmix64(mix[alive_idx] ^ rsalt, np) >> u64(11)).astype(
-                np.float64
-            ) * 2.0**-53
-            moving = alive_idx[u >= stop_prob]
-            alive_idx = moving
-            if len(moving) == 0:
-                break
-            c = wc[moving]
-            deg = lg.out_deg[c]
-            dang = deg == 0
-            if dang.any():
-                wc[moving[dang]] = ws_d[moving[dang]]
-            mv = moving[~dang]
-            if len(mv):
-                msalt = u64(
-                    ((rnd + 1) * 0xA076_1D64_78BD_642F + 0x9E6C_63D0_876A_9A47)
-                    % (2**64)
-                )
-                u2 = (_splitmix64(mix[mv] ^ msalt, np) >> u64(11)).astype(
-                    np.float64
-                ) * 2.0**-53
-                d = lg.out_deg[wc[mv]]
-                pick = np.minimum((u2 * d).astype(np.int64), d - 1)
-                wc[mv] = lg.indices[lg.indptr[wc[mv]] + pick]
-
-    # exact in-batch aggregation on (start, endpoint).  Raw ids can't be
-    # composite-packed (arbitrary int64 residues could collide), but both
-    # sides are available as POSITIONS into the sorted lg.ids (ws_d from
-    # line one of the walk setup, wc throughout), so pos_s * n + pos_c is
-    # collision-free up to n ~ 3e9 — one probed-kind unique instead of a
-    # two-key lexsort (r12's stable-pinned lexsort was the mc_dist10
-    # 0.34x regression; ascending position order == ascending id order,
-    # so the emitted rows are identical).
-    from .._nputil import group_count
-
-    n_ids = np.int64(len(lg.ids))
-    uniq, counts = group_count(ws_d * n_ids + wc)
-    return pd.DataFrame(
-        {
-            "start": lg.ids[uniq // n_ids],
-            "cur": lg.ids[uniq % n_ids],
-            "cnt": counts.astype(np.int64),
-        }
-    )
 
 
 def _counted_step_batch(pdf, base_seed, step_i, stop_prob, np, pd):
@@ -318,7 +223,6 @@ def monte_carlo(
     mode: str = "auto",
     seed: int | None = 42,
     max_supersteps: int = 1_000,
-    on_budget: str = "stop",
 ) -> DataFrame:
     """Whole-graph MC PPR. Returns DataFrame(node, ppr)."""
     conf = WholeGraphConf(alpha=alpha, n=graph.n, m=graph.m)
@@ -328,9 +232,7 @@ def monte_carlo(
         rng = np.random.default_rng(seed)
         pi = _kernels.monte_carlo(lg, lg.dense(source), alpha, omega, rng)
         return ppr_result_from_dense(graph, pi)
-    return _monte_carlo_distributed(
-        graph, source, alpha, omega, seed, max_supersteps, on_budget
-    )
+    return _monte_carlo_distributed(graph, source, alpha, omega, seed, max_supersteps)
 
 
 def _monte_carlo_distributed(
@@ -340,7 +242,6 @@ def _monte_carlo_distributed(
     omega: int,
     seed: int | None,
     max_supersteps: int = 1_000,
-    on_budget: str = "stop",
 ) -> DataFrame:
     """Counted-walk simulation: the omega walks NEVER materialize as rows.
 
@@ -364,7 +265,6 @@ def _monte_carlo_distributed(
         zero_hop=True,
         seed=seed,
         max_supersteps=max_supersteps,
-        on_budget=on_budget,
     )
     return ends.select(
         F.col("cur").alias("node"),
@@ -379,17 +279,13 @@ def run_walks_counted(
     zero_hop: bool = True,
     seed: int | None = None,
     max_supersteps: int = 1_000,
-    on_budget: str = "stop",
 ) -> DataFrame:
     """Drive counted walks(start, cur, cnt) to their stop nodes; returns
     (start, cur, cnt) of stopped walk counts (summed over supersteps).
 
-    ``on_budget`` picks what happens to walks still live when the
-    superstep budget runs out: ``"stop"`` (default) freezes them at their
-    current node — the bounded-step reading; ``"drain"`` finishes them
-    exactly in one vectorized pass against the driver-local CSR
-    (_drain_walks_batch) when the graph fits the local bound, falling
-    back to "stop" (with the WARN) when it does not.
+    Walks still live after ``max_supersteps`` supersteps are force-stopped
+    at their current node (with a WARN), so endpoint counts always sum to
+    the walk count.
 
     Reference walk semantics (alpha-stop, uniform out-neighbor, dangling
     resets to the walk's START, degree-0 start stops immediately,
@@ -499,46 +395,18 @@ def run_walks_counted(
         else:
             # superstep budget exhausted with walks possibly still live
             if not live.isEmpty():
-                if on_budget == "drain" and graph.fits_local():
-                    # finish the geometric tail exactly, in ONE job: the
-                    # supersteps above carried the heavy head; the
-                    # survivors expand to per-walk numpy rows against the
-                    # broadcast CSR (_drain_walks_batch).  Same walk
-                    # semantics, no truncated mass, no WARN.
-                    bc = graph.local_broadcast
-                    drain_seed = base_seed
+                # force-stop at the current node (the bounded-step reading
+                # of the reference's walk loop) instead of silently
+                # dropping mass — endpoint counts always sum to the walk
+                # count, so downstream ppr mass stays 1
+                import logging
 
-                    def drain(batches):
-                        import numpy as np
-                        import pandas as pd
-
-                        lg = bc.value
-                        for pdf in batches:
-                            yield _drain_walks_batch(
-                                pdf, drain_seed, alpha, lg, np, pd
-                            )
-
-                    finished.append(
-                        live.mapInPandas(drain, "start long, cur long, cnt long")
-                    )
-                else:
-                    # force-stop at the current node (the bounded-step
-                    # reading of the reference's walk loop) instead of
-                    # silently dropping mass — endpoint counts always sum
-                    # to the walk count, so downstream ppr mass stays 1.
-                    # (on_budget="drain" lands here too when the graph
-                    # exceeds the driver-local CSR bound: at that scale
-                    # raise max_supersteps instead — cluster job latency,
-                    # unlike local mode's, amortizes near-empty steps.)
-                    import logging
-
-                    logging.getLogger(__name__).warning(
-                        "run_walks_counted: max_supersteps=%d reached with "
-                        "live walks; force-stopping them at their current "
-                        "node",
-                        max_supersteps,
-                    )
-                    finished.append(live)
+                logging.getLogger(__name__).warning(
+                    "run_walks_counted: max_supersteps=%d reached with "
+                    "live walks; force-stopping them at their current node",
+                    max_supersteps,
+                )
+                finished.append(live)
 
     out = finished[0]
     for f in finished[1:]:

@@ -146,51 +146,6 @@ def test_counted_multi_start_mass_and_zero_hop(got):
     assert per_start == {int(s1): 700, int(s2): 300}
 
 
-def test_counted_drain_exact_mass_layout_and_distribution(got):
-    """on_budget="drain": the tail-drain pass must (1) conserve mass
-    exactly, (2) be identical under any partition layout (row-content
-    seeded draws), (3) actually WALK past the cap (a budget-0 drain is a
-    full in-batch MC run, nothing frozen at the start), and (4) satisfy
-    the same distributional bound vs the power oracle as the superstep
-    path — the drain is the identical walk process, just simulated
-    in-process."""
-    lg = got.local
-    s = got.id_of("Eddard")
-    w1 = got.spark.createDataFrame(
-        [(int(s), int(s), 20_000)], "start long, cur long, cnt long"
-    )
-    e1 = {
-        r["cur"]: r["cnt"]
-        for r in monte_carlo.run_walks_counted(
-            got, w1, ALPHA, seed=11, max_supersteps=0, on_budget="drain"
-        ).collect()
-    }
-    e2 = {
-        r["cur"]: r["cnt"]
-        for r in monte_carlo.run_walks_counted(
-            got, w1.repartition(7), ALPHA, seed=11, max_supersteps=0,
-            on_budget="drain",
-        ).collect()
-    }
-    assert e1 == e2
-    assert sum(e1.values()) == 20_000
-    # budget-0 force-stop would put every walk at the start; drain spreads
-    assert len(e1) > 1 and e1.get(int(s), 0) < 20_000
-    oracle = _kernels.power_method(lg, lg.dense(s), ALPHA, 300)
-    est = np.zeros(lg.n)
-    for node, cnt in e1.items():
-        est[lg.dense(node)] = cnt / 20_000.0
-    bound = 5 * np.sqrt(np.maximum(oracle * (1 - oracle), 1e-6) / 20_000)
-    assert (np.abs(est - oracle) <= bound + 5e-3).all()
-    # a mid-loop cap (some superstep mass already stopped) splices the
-    # drained tail onto the superstep head without losing or double
-    # counting anything
-    e3 = monte_carlo.run_walks_counted(
-        got, w1, ALPHA, seed=11, max_supersteps=3, on_budget="drain"
-    ).collect()
-    assert sum(r["cnt"] for r in e3) == 20_000
-
-
 def test_counted_truncation_force_stops(got):
     """A superstep budget too small to drain the walks must force-stop the
     survivors at their current node: endpoint mass always sums to the walk

@@ -142,10 +142,10 @@ def test_monte_carlo_statistical(got):
 def test_fora_whole_graph_error_bound(got):
     lg = got.local
     s = lg.dense(got.id_of("Eddard"))
-    n, m = lg.n, lg.m
+    m = lg.m
     rng = np.random.default_rng(11)
-    eps, delta, pfail = 0.5, 1.0 / n, 1.0 / n
-    pi = _kernels.fora_whole_graph(lg, s, ALPHA, eps, delta, pfail, m, rng)
+    eps = 0.5
+    pi = _kernels.fora_whole_graph(lg, s, ALPHA, eps, m, rng)
     oracle = _kernels.power_method(lg, s, ALPHA, 300)
     # FORA guarantee: relative error eps for pi >= delta, w.h.p.; use a loose
     # absolute cap for the tiny fixture

@@ -120,4 +120,13 @@ def test_bad_mode_raises(tpch_graph):
         eng.ppr(s, mode="bogus")
     with pytest.raises(ValueError, match="bogus"):
         eng.topk(s, 5, mode="bogus")
+    # a parameter the chosen algorithm does not take is an error, not ignored
+    with pytest.raises(TypeError, match="rmax"):
+        eng.ppr(s, algo="power", rmax=1e-3)
+    with pytest.raises(TypeError, match="push_halvings"):
+        eng.ppr(s, algo="montecarlo", push_halvings=1)
+    with pytest.raises(TypeError, match="iterations"):
+        eng.topk(s, 5, algo="fora_topk", iterations=3)
+    with pytest.raises(TypeError, match="seed"):
+        eng.topk(s, 5, algo="base", prep_path="unused", seed=1)
     assert tpch_graph.resolve_mode("auto") == "local"

@@ -87,7 +87,7 @@ def key_fns(spark, g, eng, src):
         "bpe": lambda: E.q_bpe_merges(spark, SF_DIR).count(),
         "mc_dist10": lambda: eng.ppr(
             src, algo="montecarlo", epsilon=0.5, mode="distributed",
-            max_supersteps=10, on_budget="drain",
+            max_supersteps=10,
         ).count(),
         "power_dist10": lambda: eng.ppr(
             src, algo="power", iterations=10, mode="distributed"
