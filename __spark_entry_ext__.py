@@ -887,7 +887,7 @@ def q_ppr_incremental(spark, sf_dir):
     rep = repair_on_insert(st0, oe, ne, alpha)
     st1 = reverse_push_state(
         spark, edges, tg, DYN_RMAX, alpha,
-        state=rep, first_unconditional=False,
+        state=rep,
         max_supersteps=DYN_RESUME_STEPS,
         state_rows_hint=hint,
     )
@@ -1025,7 +1025,7 @@ def q_ppr_incremental_delete(spark, sf_dir):
     rep = repair_on_delete(st0, edges, de, alpha)
     st1 = reverse_push_state(
         spark, ke, tg, DYN_RMAX, alpha,
-        state=rep, first_unconditional=False,
+        state=rep,
         max_supersteps=DYN_RESUME_STEPS,
         state_rows_hint=hint,
     )
@@ -1314,7 +1314,7 @@ def q_ppr_incremental_mixed(spark, sf_dir):
     rep2 = repair_on_delete(rep1, edges, de, alpha)
     st1 = reverse_push_state(
         spark, fe, tg, DYN_RMAX, alpha,
-        state=rep2, first_unconditional=False,
+        state=rep2,
         max_supersteps=DYN_MIXED_RESUME_STEPS,
         state_rows_hint=hint,
     )

@@ -25,16 +25,16 @@ from .operators import (
     topk as topk_ops,
 )
 
-ALGOS = (
+PPR_ALGOS = (
     "power",  # Power Method oracle (I3)
     "fwdpush",  # Forward Push (I1)
     "montecarlo",  # Monte-Carlo walks (R2/A1)
     "fora",  # FORA whole-graph (I5)
-    "fora_topk",  # FORA top-k (I6)
     "backward",  # Backward Search (I4)
     "pagerank",  # classic PPR comparator (I8)
     "base",  # all-pair prep lookup (I7)
 )
+TOPK_ALGOS = PPR_ALGOS + ("fora_topk",)  # FORA top-k (I6) answers only top-k
 
 # The keyword parameters each algorithm takes; any other raises TypeError.
 ALGO_PARAMS = {
@@ -49,10 +49,14 @@ ALGO_PARAMS = {
 }
 
 
-def _check_params(algo: str, params: dict) -> None:
-    unknown = sorted(set(params) - ALGO_PARAMS.get(algo, set()))
+def _check_params(algo: str, params: dict, accepted: tuple[str, ...]) -> None:
+    if algo not in accepted:
+        raise ValueError(f"unknown algo {algo!r}; one of {accepted}")
+    unknown = sorted(set(params) - ALGO_PARAMS[algo])
     if unknown:
         raise TypeError(f"algo {algo!r} takes no parameter {', '.join(unknown)}")
+    if algo == "base" and "prep_path" not in params:
+        raise TypeError("algo 'base' requires the parameter prep_path")
 
 
 class PPREngine:
@@ -87,9 +91,7 @@ class PPREngine:
         **params,
     ) -> DataFrame:
         """Single-source PPR -> DataFrame(node, ppr), descending not implied."""
-        if algo == "fora_topk" or algo not in ALGOS:
-            raise ValueError(f"unknown algo {algo!r}; one of {ALGOS}")
-        _check_params(algo, params)
+        _check_params(algo, params, PPR_ALGOS)
         s = self._resolve(source)
         g, a = self.graph, self.alpha
         if algo == "power":
@@ -125,9 +127,8 @@ class PPREngine:
         self, source: int | str, k: int, algo: str = "power", mode: str = "auto", **params
     ) -> DataFrame:
         """Tie-aware top-k (result may exceed k rows, reference T3 semantics)."""
+        _check_params(algo, params, TOPK_ALGOS)
         s = self._resolve(source)
-        if algo in ("fora_topk", "base"):
-            _check_params(algo, params)
         if algo == "fora_topk":
             full = fora.fora_topk(
                 self.graph, s, k, epsilon=params.get("epsilon", DEFAULT_EPSILON),

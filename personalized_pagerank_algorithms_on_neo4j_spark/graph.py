@@ -58,6 +58,25 @@ class LocalGraph:
     def m(self) -> int:
         return len(self.edge_src)
 
+    @classmethod
+    def from_coo(cls, ids: np.ndarray, src: np.ndarray, dst: np.ndarray) -> LocalGraph:
+        """CSR snapshot of the dense edge list ``src -> dst`` over sorted
+        ``ids``."""
+        n = len(ids)
+        out_deg = np.bincount(src, minlength=n).astype(np.int64)
+        in_deg = np.bincount(dst, minlength=n).astype(np.int64)
+        return cls(
+            ids=ids,
+            indptr=np.concatenate(([0], np.cumsum(out_deg))),
+            indices=dst[np.argsort(src, kind="stable")],
+            rindptr=np.concatenate(([0], np.cumsum(in_deg))),
+            rindices=src[np.argsort(dst, kind="stable")],
+            out_deg=out_deg,
+            in_deg=in_deg,
+            edge_src=src,
+            edge_dst=dst,
+        )
+
     def dense(self, orig_id: int) -> int:
         pos = int(np.searchsorted(self.ids, orig_id))
         if pos >= len(self.ids) or self.ids[pos] != orig_id:
@@ -390,28 +409,7 @@ class PropertyGraph:
                 f"edges reference node ids absent from nodes table: {sorted(missing)!r}..."
             )
 
-        out_deg = np.bincount(src, minlength=n).astype(np.int64)
-        in_deg = np.bincount(dst, minlength=n).astype(np.int64)
-
-        order = np.argsort(src, kind="stable")
-        indices = dst[order]
-        indptr = np.concatenate(([0], np.cumsum(out_deg)))
-
-        rorder = np.argsort(dst, kind="stable")
-        rindices = src[rorder]
-        rindptr = np.concatenate(([0], np.cumsum(in_deg)))
-
-        return LocalGraph(
-            ids=node_ids,
-            indptr=indptr,
-            indices=indices,
-            rindptr=rindptr,
-            rindices=rindices,
-            out_deg=out_deg,
-            in_deg=in_deg,
-            edge_src=src,
-            edge_dst=dst,
-        )
+        return LocalGraph.from_coo(node_ids, src, dst)
 
     @cached_property
     def local_broadcast(self):

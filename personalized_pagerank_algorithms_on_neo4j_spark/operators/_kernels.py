@@ -181,25 +181,42 @@ def backward_search(
 
 
 def backward_search_batch(
-    lg: LocalGraph, t: int, alpha: float, rmax: float, max_supersteps: int = 10_000
+    lg: LocalGraph,
+    t: int,
+    alpha: float,
+    rmax: float,
+    reserve: np.ndarray | None = None,
+    residue: np.ndarray | None = None,
+    max_supersteps: int = 10_000,
 ) -> tuple[np.ndarray, np.ndarray, int]:
     """Frontier-synchronous reverse push: per superstep every node with
-    r > rmax pushes (plus an unconditional first step from the target)."""
+    |r| > rmax pushes. Returns (reserve, residue, supersteps_used).
+
+    ``residue=None`` is the reference search from target t: an in-degree-0
+    target short-circuits to pi(t,t) = 1, and the target pushes
+    unconditionally on the first superstep. A passed ``residue`` (with
+    ``reserve``) resumes that push state: no short-circuit, and residues of
+    either sign qualify on |r| > rmax from the first superstep.
+    """
     n = lg.n
-    r = np.zeros(n)
-    pi = np.zeros(n)
-    if lg.in_deg[t] == 0:
-        pi[t] = 1.0
-        return pi, r, 0
-    r[t] = 1.0
+    pi = np.zeros(n) if reserve is None else reserve.copy()
+    r = np.zeros(n) if residue is None else residue.copy()
+    thr = rmax
+    if residue is None:
+        if lg.in_deg[t] == 0:  # Backward_Search.java:44-49
+            pi[t] = 1.0
+            return pi, r, 0
+        r[t] = 1.0
+        thr = 0.0
     src, dst = lg.edge_src, lg.edge_dst
     out = lg.out_deg
     inv_out = np.where(out > 0, 1.0 / np.maximum(out, 1), 0.0)
     steps = 0
-    for step in range(max_supersteps):
-        qual = r > rmax if step > 0 else r > 0.0
+    for _ in range(max_supersteps):
+        qual = np.abs(r) > thr
         if not qual.any():
             break
+        thr = rmax
         steps += 1
         rq = np.where(qual, r, 0.0)
         pi = pi + alpha * rq

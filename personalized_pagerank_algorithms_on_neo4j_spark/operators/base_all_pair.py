@@ -24,7 +24,7 @@ from pyspark.sql import functions as F
 from ..config import DEFAULT_ALPHA
 from ..graph import PropertyGraph
 from ..sources.prep_store import read_prep, write_prep
-from .backward_search import backward_search_all
+from .backward_search import backward_search_all, split_by_in_degree
 from .topk import retrieve_topk
 
 
@@ -92,15 +92,7 @@ def _base_all_local(
     from . import _kernels
 
     shuffle_n = int(graph.spark.conf.get("spark.sql.shuffle.partitions"))
-    t = targets.select(F.col("target").cast("long").alias("target"))
-    ind = graph.degrees.select("node", "in_degree")  # cached table
-    t_deg = t.join(ind, t.target == ind.node, "left").select(
-        "target", F.coalesce("in_degree", F.lit(0)).alias("in_degree")
-    )
-    trivial = t_deg.where(F.col("in_degree") == 0).select(
-        F.col("target").alias("source"), "target", F.lit(1.0).alias("ppr")
-    )
-    nontrivial = t_deg.where(F.col("in_degree") > 0).select("target")
+    trivial, nontrivial = split_by_in_degree(graph, targets)
 
     bc = graph.local_broadcast
 
@@ -128,7 +120,9 @@ def _base_all_local(
     heavy = nontrivial.repartition(shuffle_n, "target").mapInPandas(
         run, "source long, target long, ppr double"
     )
-    return trivial.unionByName(heavy)
+    return trivial.select(
+        F.col("target").alias("source"), "target", F.lit(1.0).alias("ppr")
+    ).unionByName(heavy)
 
 
 def base_preprocess_to_store(

@@ -54,9 +54,12 @@ Production guidance: batch deletes WITH inserts into one mixed repair
 (one resume amortizes both); prefer recompute only on provably shallow
 graphs or at loose rmax.
 
-All loops are the engine's standard superstep shape: state keyed
-(target, node), one join + one groupBy per round, per-round eager
-checkpoints, early exit off a 1-row emptiness probe.
+The fresh push and every resume run `backward_search.reverse_push`, the
+package's one distributed reverse-push loop (state keyed (target, node),
+one frontier-bounded push aggregate + one full-outer merge per round,
+per-round eager checkpoints, early exit off a 1-row emptiness probe);
+under the driver-local edge cutoff the same schedule runs as per-target
+`_kernels.backward_search_batch` resumes.
 """
 
 from __future__ import annotations
@@ -65,20 +68,21 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..config import DEFAULT_ALPHA, LOCAL_EDGE_THRESHOLD
-from ..plans.iterative import loop_shuffle_partitions, static_superstep_plan
+from ..plans.iterative import loop_shuffle_partitions
+from .backward_search import over_budget, reverse_push
 
 # Driver-local kernel bounds (beyond the shared edge cutoff): the dense
 # (targets x nodes) state matrices and the per-superstep O(T x E) push
 # must both stay broadcast-sized.  Above either bound the distributed
-# superstep loop below runs unchanged — the 100x plan.
+# superstep loop (`reverse_push`) runs unchanged — the 100x plan.
 _LOCAL_STATE_CELLS = 32_000_000  # T x n doubles, ~256 MB for the pair
 _LOCAL_PUSH_WORK = 64_000_000  # T x E multiply-adds per superstep
 
 
 def _edges_with_outdeg(edges: DataFrame) -> DataFrame:
-    """(src, dst, od): directed edge list with the src out-degree bound
-    on (the push weight denominator)."""
-    deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("od"))
+    """(src, dst, src_out_degree): directed edge list with the src
+    out-degree bound on (the push weight denominator)."""
+    deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("src_out_degree"))
     return edges.join(deg, "src")
 
 
@@ -90,7 +94,6 @@ def reverse_push_state(
     alpha: float = DEFAULT_ALPHA,
     max_supersteps: int = 200,
     state: DataFrame | None = None,
-    first_unconditional: bool = True,
     state_rows_hint: int | None = None,
 ) -> DataFrame:
     """Reverse push to |residue| <= rmax, KEEPING residues: returns
@@ -102,8 +105,8 @@ def reverse_push_state(
     ``state=None`` starts fresh from r = e_t per target (the first
     superstep pushes targets unconditionally, mirroring
     Backward_Search.java:44's immediate pop); pass a repaired state to
-    RESUME maintenance pushes (``first_unconditional=False`` — only
-    |r| > rmax rows move, positive or negative).
+    RESUME maintenance pushes (only |r| > rmax rows move, positive or
+    negative).
 
     ``state_rows_hint``: optional bound on the state row count
     (|targets| x nodes from the caller) — scales the loop's shuffle
@@ -111,10 +114,11 @@ def reverse_push_state(
     it the loop pays session-default task counts per round even when the
     state is a few thousand rows."""
     # one materialization serves both paths: the distributed loop reads
-    # the od-joined checkpoint, the gate counts it, the local kernel
+    # the degree-joined checkpoint, the gate counts it, the local kernel
     # collects it
     edges = _edges_with_outdeg(edges).localCheckpoint(eager=True)
-    if state is None:
+    fresh = state is None
+    if fresh:
         state = targets.select(
             F.col("target").cast("long").alias("target"),
             F.col("target").cast("long").alias("node"),
@@ -122,94 +126,26 @@ def reverse_push_state(
             F.lit(0.0).alias("reserve"),
         )
     # Driver-local kernel under the LocalGraph edge cutoff (graph.py
-    # precedent; louvain/scc r12 idiom): the frontier-synchronous
-    # |r|-qualified push recurrence is replayed on dense numpy state —
-    # same per-superstep algebra, same stopping round, same raise — so
-    # the fixed point agrees to float precision (the oracle compares
-    # after ROUND(..., 9)).  Replaces ~3 Spark jobs per superstep
-    # (frontier probe, push aggregate + full-outer merge, checkpoint).
-    if edges.count() <= LOCAL_EDGE_THRESHOLD:
+    # precedent): the kernel resumes each target's state on the same
+    # |r|-qualified frontier-synchronous schedule, so the fixed point
+    # agrees to float precision (the oracle compares after
+    # ROUND(..., 9)).  A fresh r = e_t qualifies on the first superstep
+    # exactly when rmax < 1; at rmax >= 1 only the distributed loop pushes
+    # it unconditionally.
+    if (rmax < 1.0 or not fresh) and edges.count() <= LOCAL_EDGE_THRESHOLD:
         local = _reverse_push_local(
-            spark,
-            edges,
-            state,
-            rmax,
-            alpha,
-            max_supersteps,
-            first_unconditional,
+            spark, edges, state, rmax, alpha, max_supersteps
         )
         if local is not None:
             return local
-    # Loop shape (the sssp_weighted merge discipline, NOT a whole-state
-    # re-aggregation): the state frame stays (target, node)-partitioned
-    # from its previous checkpoint; each round only the FRONTIER-BOUNDED
-    # pushed-residue aggregate moves through the shuffle, merged with one
-    # full-outer join.  This is what makes the incremental resume cheap —
-    # a small repair cascade shuffles a few rows per round while the
-    # state is only streamed, never re-shuffled.
     loop_parts = (
         loop_shuffle_partitions(spark, state_rows_hint)
         if state_rows_hint is not None
         else None
     )
-    with static_superstep_plan(spark, loop_parts):
-        state = state.localCheckpoint(eager=True)
-        first = first_unconditional
-        for _ in range(max_supersteps):
-            thr = 0.0 if first else rmax
-            first = False
-            frontier = state.where(F.abs(F.col("residue")) > thr).select(
-                "target", "node", "residue"
-            )
-            if frontier.isEmpty():
-                break
-            pushed = (
-                frontier.join(edges, frontier.node == edges.dst)
-                .groupBy("target", F.col("src").alias("node"))
-                .agg(
-                    F.sum(
-                        F.lit(1.0 - alpha) * F.col("residue") / F.col("od")
-                    ).alias("dr")
-                )
-            )
-            qual = F.abs(F.col("residue")) > thr
-            # full outer joins cannot broadcast; the state side is already
-            # (target, node)-partitioned from the previous checkpoint, so
-            # only the frontier-bounded pushed aggregate moves
-            state = (
-                state.join(pushed, ["target", "node"], "full_outer")
-                .select(
-                    "target",
-                    "node",
-                    (
-                        F.when(qual, 0.0)
-                        .otherwise(F.coalesce("residue", F.lit(0.0)))
-                        + F.coalesce("dr", F.lit(0.0))
-                    ).alias("residue"),
-                    (
-                        F.coalesce("reserve", F.lit(0.0))
-                        + F.when(
-                            qual, F.lit(alpha) * F.col("residue")
-                        ).otherwise(0.0)
-                    ).alias("reserve"),
-                )
-                .localCheckpoint(eager=True)
-            )
-        else:
-            # the loop detects convergence at the TOP of the next
-            # iteration; a push that drained the frontier on the final
-            # allowed superstep is converged, not over budget — re-probe
-            # before raising (review finding r10; the matching.py
-            # pattern)
-            if (
-                state.where(F.abs(F.col("residue")) > rmax).limit(1).count()
-                > 0
-            ):
-                raise RuntimeError(
-                    f"reverse_push_state: |residue| > {rmax} after "
-                    f"{max_supersteps} supersteps — raise max_supersteps"
-                )
-    return state
+    return reverse_push(
+        edges, state, rmax, alpha, max_supersteps, fresh, loop_parts
+    )
 
 
 def _reverse_push_local(
@@ -219,30 +155,22 @@ def _reverse_push_local(
     rmax: float,
     alpha: float,
     max_supersteps: int,
-    first_unconditional: bool,
 ) -> DataFrame | None:
-    """numpy replay of `reverse_push_state`'s superstep recurrence on a
-    dense (targets x nodes) state.  Returns None when the dense state or
-    the per-superstep push work would exceed the driver-local bounds —
-    the caller then runs the distributed loop unchanged.
-
-    Faithful per round: frontier = |r| > thr (thr = 0 on an unconditional
-    first round, rmax after), reserve += alpha*r over the frontier, every
-    frontier residue zeroed, each edge (u, v) returns
-    (1-alpha) * r(v) / d(u) to u — the same linear step the DataFrame
-    loop and the unrolled SQL oracle execute, so the fixed point agrees
-    to float precision.  Rows with residue == reserve == 0 are not
-    emitted: downstream consumers (the repair sums, the final
-    positive/nonzero filter) treat absent and all-zero rows identically."""
+    """`reverse_push_state` on the driver: one
+    `_kernels.backward_search_batch` resume per target of the dense
+    (targets x nodes) state.  Returns None when the dense state or the
+    per-superstep push work would exceed the driver-local bounds — the
+    caller then runs the distributed loop unchanged."""
     import numpy as np
-    import pandas as pd
+
+    from .._nputil import unique_stable
+    from ..graph import LocalGraph
+    from . import _kernels
 
     epd = edges.select("src", "dst").toPandas()
     spd = state.toPandas()
     es_o = epd["src"].to_numpy(dtype=np.int64)
     ed_o = epd["dst"].to_numpy(dtype=np.int64)
-    from .._nputil import unique_stable
-
     tgt = unique_stable(spd["target"].to_numpy(dtype=np.int64))
     ids = unique_stable(
         np.concatenate(
@@ -252,49 +180,33 @@ def _reverse_push_local(
     n, t_cnt, m = len(ids), len(tgt), len(es_o)
     if t_cnt * n > _LOCAL_STATE_CELLS or t_cnt * m > _LOCAL_PUSH_WORK:
         return None
-    es = np.searchsorted(ids, es_o)
-    ed = np.searchsorted(ids, ed_o)
+    lg = LocalGraph.from_coo(
+        ids, np.searchsorted(ids, es_o), np.searchsorted(ids, ed_o)
+    )
+    resid, resv = _dense_state(spd, tgt, ids)
+    for i, t in enumerate(np.searchsorted(ids, tgt)):
+        resv[i], resid[i], _ = _kernels.backward_search_batch(
+            lg, int(t), alpha, rmax, reserve=resv[i], residue=resid[i],
+            max_supersteps=max_supersteps,
+        )
+        if (np.abs(resid[i]) > rmax).any():
+            raise over_budget(rmax, max_supersteps)
+    return _state_df(spark, tgt, ids, resid, resv)
+
+
+def _dense_state(spd, tgt, ids):
+    """(residue, reserve) (targets x nodes) matrices of a collected state.
+    State is (target, node)-unique by construction; add.at keeps the
+    groupBy-sum semantics if a caller ever passes duplicates."""
+    import numpy as np
+
+    resid = np.zeros((len(tgt), len(ids)))
+    resv = np.zeros((len(tgt), len(ids)))
     ti = np.searchsorted(tgt, spd["target"].to_numpy(dtype=np.int64))
     ni = np.searchsorted(ids, spd["node"].to_numpy(dtype=np.int64))
-    resid = np.zeros((t_cnt, n))
-    resv = np.zeros((t_cnt, n))
-    # state is (target, node)-unique by construction; add.at keeps the
-    # groupBy-sum semantics if a caller ever passes duplicates
     np.add.at(resid, (ti, ni), spd["residue"].to_numpy(dtype=np.float64))
     np.add.at(resv, (ti, ni), spd["reserve"].to_numpy(dtype=np.float64))
-    od = np.bincount(es, minlength=n).astype(np.int64)
-    w = (1.0 - alpha) / od[es]
-    first = first_unconditional
-    for _ in range(max_supersteps):
-        thr = 0.0 if first else rmax
-        first = False
-        qual = np.abs(resid) > thr
-        if not qual.any():
-            break
-        rq = np.where(qual, resid, 0.0)
-        resv = resv + alpha * rq
-        resid = np.where(qual, 0.0, resid)
-        for t in range(t_cnt):
-            resid[t] += np.bincount(es, weights=rq[t, ed] * w, minlength=n)
-    else:
-        if (np.abs(resid) > rmax).any():
-            raise RuntimeError(
-                f"reverse_push_state: |residue| > {rmax} after "
-                f"{max_supersteps} supersteps — raise max_supersteps"
-            )
-    keep = (resid != 0.0) | (resv != 0.0)
-    t_idx, n_idx = np.nonzero(keep)
-    return spark.createDataFrame(
-        pd.DataFrame(
-            {
-                "target": tgt[t_idx],
-                "node": ids[n_idx],
-                "residue": resid[keep],
-                "reserve": resv[keep],
-            }
-        ),
-        "target long, node long, residue double, reserve double",
-    )
+    return resid, resv
 
 
 def _repair_local_arrays(state: DataFrame, old_edges: DataFrame, batch: DataFrame):
@@ -322,20 +234,12 @@ def _repair_local_arrays(state: DataFrame, old_edges: DataFrame, batch: DataFram
     sn = spd["node"].to_numpy(dtype=np.int64)
     tgt = unique_stable(spd["target"].to_numpy(dtype=np.int64))
     ids = unique_stable(np.concatenate([os_, od_, bs_, bd_, sn, tgt]))
-    t_cnt, n = len(tgt), len(ids)
-    if t_cnt * n > _LOCAL_STATE_CELLS:
+    if len(tgt) * len(ids) > _LOCAL_STATE_CELLS:
         return None
-    resid = np.zeros((t_cnt, n))
-    resv = np.zeros((t_cnt, n))
-    ti = np.searchsorted(tgt, spd["target"].to_numpy(dtype=np.int64))
-    ni = np.searchsorted(ids, sn)
-    np.add.at(resid, (ti, ni), spd["residue"].to_numpy(dtype=np.float64))
-    np.add.at(resv, (ti, ni), spd["reserve"].to_numpy(dtype=np.float64))
     return (
         tgt,
         ids,
-        resid,
-        resv,
+        *_dense_state(spd, tgt, ids),
         np.searchsorted(ids, os_),
         np.searchsorted(ids, od_),
         np.searchsorted(ids, bs_),
@@ -343,8 +247,8 @@ def _repair_local_arrays(state: DataFrame, old_edges: DataFrame, batch: DataFram
     )
 
 
-def _repair_state_df(spark, tgt, ids, resid, resv) -> DataFrame:
-    """Materialize the repaired dense state (zero-zero rows dropped — the
+def _state_df(spark, tgt, ids, resid, resv) -> DataFrame:
+    """Materialize a dense state (zero-zero rows dropped — the
     push-kernel equivalence: downstream consumers treat absent and
     all-zero rows identically)."""
     import numpy as np
@@ -374,8 +278,8 @@ def repair_on_insert(
     """Apply the (++) residual repair for a batch of INSERTED edges:
     returns the state (target, node, residue, reserve) valid on
     old_edges UNION new_edges, with |residue| possibly above rmax at the
-    touched sources — follow with `reverse_push_state(..., state=...,
-    first_unconditional=False)` to restore the estimate guarantee.
+    touched sources — follow with `reverse_push_state(..., state=...)` to
+    restore the estimate guarantee.
     ``new_edges`` must be disjoint from ``old_edges`` (true insertions);
     both are (src, dst) frames."""
     local = _repair_local_arrays(state, old_edges, new_edges)
@@ -408,7 +312,7 @@ def repair_on_insert(
             )
             px = np.bincount(osr2, weights=resv[t, odst2], minlength=n)[tsrc]
             resid[t, tsrc] += k * (t1 + f_old * px)
-        return _repair_state_df(state.sparkSession, tgt, ids, resid, resv)
+        return _state_df(state.sparkSession, tgt, ids, resid, resv)
     ne = new_edges.select("src", "dst").distinct()
     d_new = ne.groupBy("src").agg(F.count(F.lit(1)).alias("c"))
     d_old = old_edges.groupBy("src").agg(F.count(F.lit(1)).alias("d"))
@@ -516,7 +420,7 @@ def repair_on_delete(
             px = np.bincount(osr2, weights=resv[t, odst2], minlength=n)[tsrc]
             pw = np.bincount(dsr, weights=resv[t, ddst], minlength=n)[tsrc]
             resid[t, tsrc] += k * (f_keep * px + (-pw / d_t))
-        return _repair_state_df(state.sparkSession, tgt, ids, resid, resv)
+        return _state_df(state.sparkSession, tgt, ids, resid, resv)
     de = del_edges.select("src", "dst").distinct()
     d_del = de.groupBy("src").agg(F.count(F.lit(1)).alias("c"))
     d_old = old_edges.groupBy("src").agg(F.count(F.lit(1)).alias("d"))
@@ -583,12 +487,14 @@ def invariant_residual(
     p = state.select("target", "node", "reserve")
     inflow = (
         e.join(p, e.dst == p.node)
-        .groupBy("target", F.col("src").alias("node"), "od")
+        .groupBy("target", F.col("src").alias("node"), "src_out_degree")
         .agg(F.sum("reserve").alias("pout"))
         .select(
             "target",
             "node",
-            (F.lit(1.0 - alpha) * F.col("pout") / F.col("od")).alias("flow"),
+            (
+                F.lit(1.0 - alpha) * F.col("pout") / F.col("src_out_degree")
+            ).alias("flow"),
         )
     )
     return (

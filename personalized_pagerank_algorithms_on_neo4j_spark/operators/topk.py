@@ -33,7 +33,3 @@ def retrieve_topk(df: DataFrame, k: int, value_col: str = "ppr") -> DataFrame:
         return df
     return df.where(F.col(value_col) >= F.lit(kth))
 
-
-def print_limit(df: DataFrame, k: int, value_col: str = "ppr") -> DataFrame:
-    """First k rows of the (possibly larger) tie-set (T4)."""
-    return df.orderBy(F.desc(value_col)).limit(k)

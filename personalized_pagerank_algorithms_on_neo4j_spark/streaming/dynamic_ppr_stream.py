@@ -232,11 +232,7 @@ def make_merge_batch(
                 alpha,
                 max_supersteps=max_supersteps,
                 state=st,
-                first_unconditional=False,
             )
-        spark.conf.set(
-            "spark.sql.sources.partitionOverwriteMode", "dynamic"
-        )
         applied = applied_ins.withColumn("op", F.lit("ins")).unionAll(
             applied_del.withColumn("op", F.lit("del"))
         )

@@ -10,10 +10,10 @@ these extend it Spark-natively (SURVEY section 7 item 9):
   `applyInPandasWithState` — per-user running count/sum that survives across
   microbatches.
 - `start_incremental_prep_refresh`: `foreachBatch` pipeline that watches the
-  event stream, maps active users to graph sources, recomputes PPR for only
-  the *affected* sources, and upserts them into the partitioned prep store
-  (partition-overwrite semantics: at 100 TB you refresh the handful of dirty
-  `source=` partitions, never the whole view).
+  event stream, maps active users to graph targets, recomputes PPR for only
+  the *affected* targets, and upserts them into a target-partitioned view
+  (per-write dynamic partition overwrite: at 100 TB you refresh the handful
+  of dirty `target=` partitions, never the whole view).
 """
 
 from __future__ import annotations
@@ -122,9 +122,6 @@ def start_incremental_prep_refresh(
     graph node ids (default: identity on user_id)."""
     from ..operators.backward_search import backward_search_all
 
-    spark = graph.spark
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-
     def refresh(batch_df: DataFrame, epoch_id: int) -> None:
         users = batch_df.select("user_id").distinct()
         targets = (
@@ -142,7 +139,12 @@ def start_incremental_prep_refresh(
             F.col("node").alias("source"), "target", "ppr"
         )
         # dynamic partition overwrite: only dirty target= partitions rewrite
-        fresh.write.mode("overwrite").partitionBy("target").parquet(prep_path)
+        (
+            fresh.write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
+            .partitionBy("target")
+            .parquet(prep_path)
+        )
 
     return (
         events.writeStream.outputMode("append")

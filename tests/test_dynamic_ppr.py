@@ -54,7 +54,7 @@ def test_invariant_through_repair_and_resume(spark):
     assert _max_defect(rep, all_e) < 1e-12
     assert rep.where(F.col("residue") < -1e-12).count() > 0
     st1 = reverse_push_state(
-        spark, all_e, tg, 1e-3, ALPHA, state=rep, first_unconditional=False
+        spark, all_e, tg, 1e-3, ALPHA, state=rep
     )
     assert _max_defect(st1, all_e) < 1e-12
     assert (
@@ -72,7 +72,7 @@ def test_incremental_matches_recompute(spark):
     rep = repair_on_insert(st0, oe, ne, ALPHA).localCheckpoint(eager=True)
     inc = reverse_push_state(
         spark, all_e, tg, 1e-9, ALPHA, state=rep,
-        first_unconditional=False, max_supersteps=500,
+        max_supersteps=500,
     )
     scr = reverse_push_state(
         spark, all_e, tg, 1e-9, ALPHA, max_supersteps=500
@@ -117,7 +117,7 @@ def test_gate_scale_maintenance(spark, tpch_graph):
     assert delta_nodes and delta_nodes <= batch_srcs
     st1 = reverse_push_state(
         spark, edges, tg, 1e-4, ALPHA, state=rep,
-        first_unconditional=False, max_supersteps=60,
+        max_supersteps=60,
     )
     assert _max_defect(st1, edges) < 1e-12
     assert st1.agg(F.max(F.abs("residue"))).collect()[0][0] <= 1e-4
@@ -254,13 +254,13 @@ def test_delete_repair_invariant_and_parity(spark):
     rep = repair_on_delete(st0, oe, de, ALPHA).localCheckpoint(eager=True)
     assert _max_defect(rep, new_e) < 1e-12
     st1 = reverse_push_state(
-        spark, new_e, tg, 1e-3, ALPHA, state=rep, first_unconditional=False
+        spark, new_e, tg, 1e-3, ALPHA, state=rep
     )
     assert _max_defect(st1, new_e) < 1e-12
     assert st1.agg(F.max(F.abs("residue"))).collect()[0][0] <= 1e-3
     inc = reverse_push_state(
         spark, new_e, tg, 1e-9, ALPHA, state=rep,
-        first_unconditional=False, max_supersteps=500,
+        max_supersteps=500,
     )
     scr = reverse_push_state(
         spark, new_e, tg, 1e-9, ALPHA, max_supersteps=500

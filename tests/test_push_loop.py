@@ -129,4 +129,15 @@ def test_bad_mode_raises(tpch_graph):
         eng.topk(s, 5, algo="fora_topk", iterations=3)
     with pytest.raises(TypeError, match="seed"):
         eng.topk(s, 5, algo="base", prep_path="unused", seed=1)
+    # each verb lists only the algorithms it accepts
+    with pytest.raises(ValueError, match="fora_topk") as err:
+        eng.ppr(s, algo="fora_topk")
+    assert "fora_topk" not in str(err.value).split("one of")[1]
+    with pytest.raises(ValueError, match="'fora_topk'\\)"):
+        eng.topk(s, 5, algo="bogus")
+    # BASE needs its store
+    with pytest.raises(TypeError, match="prep_path"):
+        eng.ppr(s, algo="base")
+    with pytest.raises(TypeError, match="prep_path"):
+        eng.topk(s, 5, algo="base")
     assert tpch_graph.resolve_mode("auto") == "local"

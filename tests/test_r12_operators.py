@@ -183,7 +183,7 @@ def test_mixed_repair_composes(spark):
     rep2 = repair_on_delete(rep1, mid, de, ALPHA).localCheckpoint(eager=True)
     assert _max_defect(rep2, fin) < 1e-12
     st1 = reverse_push_state(
-        spark, fin, tg, 1e-3, ALPHA, state=rep2, first_unconditional=False
+        spark, fin, tg, 1e-3, ALPHA, state=rep2
     )
     assert _max_defect(st1, fin) < 1e-12
     assert st1.agg(F.max(F.abs("residue"))).collect()[0][0] <= 1e-3
@@ -198,7 +198,7 @@ def test_mixed_matches_recompute(spark):
     rep2 = repair_on_delete(rep1, mid, de, ALPHA).localCheckpoint(eager=True)
     inc = reverse_push_state(
         spark, fin, tg, 1e-9, ALPHA, state=rep2,
-        first_unconditional=False, max_supersteps=500,
+        max_supersteps=500,
     )
     scr = reverse_push_state(spark, fin, tg, 1e-9, ALPHA, max_supersteps=500)
     a = {(r.target, r.node): r.reserve for r in scr.collect()}

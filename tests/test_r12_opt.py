@@ -296,7 +296,6 @@ def test_reverse_push_local_matches_distributed(spark):
             1e-4,
             1.0 / 7.0,
             state=rep,
-            first_unconditional=False,
             max_supersteps=60,
         )
         rows = st1.select(

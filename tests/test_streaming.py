@@ -138,6 +138,47 @@ def test_incremental_prep_refresh(spark, got, tmp_path, events_dir):
     assert np.max(np.abs(est - pi_k)) < 1e-12
 
 
+def test_prep_refresh_keeps_session_overwrite_mode(spark, tpch_graph, tmp_path, events_dir):
+    """The refresh overwrites its target= partitions per write, leaving the
+    session's partitionOverwriteMode alone: a full BASE store overwrite
+    afterwards still drops the partitions it no longer holds."""
+    from personalized_pagerank_algorithms_on_neo4j_spark.sources.prep_store import (
+        read_prep,
+        write_prep,
+    )
+
+    lg = tpch_graph.local
+    live = [int(lg.ids[i]) for i in np.flatnonzero(lg.in_deg > 0)[:2]]
+    key = "spark.sql.sources.partitionOverwriteMode"
+    before = spark.conf.get(key)
+
+    def user_to_node(users):
+        pick = F.when(F.col("user_id") % 2 == 0, live[0]).otherwise(live[1])
+        return users.select(pick.cast("long").alias("target")).distinct()
+
+    stream = S.read_event_stream(spark, events_dir, max_files_per_trigger=1)
+    q = S.start_incremental_prep_refresh(
+        tpch_graph, stream, str(tmp_path / "refresh"), rmax=1e-2, user_to_node=user_to_node
+    )
+    assert spark.conf.get(key) == before
+    _drain(q)
+    assert spark.conf.get(key) == before
+    t = live[0]
+    rows = S.lookup_to_target(spark, str(tmp_path / "refresh"), t).collect()
+    pi_k, _, _ = _kernels.backward_search_batch(lg, lg.dense(t), 0.15, 1e-2)
+    est = np.zeros(lg.n)
+    for r in rows:
+        est[lg.dense(r["node"])] = r["ppr"]
+    assert np.max(np.abs(est - pi_k)) < 1e-12
+
+    store = str(tmp_path / "prep")
+    schema = "source long, target long, ppr double"
+    write_prep(spark.createDataFrame([(s, 1, 0.5) for s in (1, 2, 3)], schema), store)
+    write_prep(spark.createDataFrame([(s, 1, 0.5) for s in (1, 2)], schema), store)
+    assert read_prep(spark, store, source=3).count() == 0
+    assert read_prep(spark, store).count() == 2
+
+
 def test_streaming_dedup_across_batches(spark, tmp_path):
     """Exact-dedup stream: duplicates are dropped within a batch (min-id
     survivor) AND across microbatches via the persistent digest store."""
