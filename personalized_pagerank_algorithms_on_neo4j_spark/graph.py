@@ -240,13 +240,15 @@ class PropertyGraph:
 
         The PPR dangling rule (out-degree-0 nodes return (1-alpha)*r to the
         *source*, Power_Method.java:79-87) becomes structural: a dangling
-        node's push traverses its virtual edge, and the superstep remaps
-        dst=-1 to the query's source. The superstep loop then needs neither a
-        per-node out-degree join nor a per-superstep global aggregation over
-        the (usually empty) dangling branch — two fewer exchanges per
-        superstep, which at 1000-executor scale is two fewer shuffle barriers
-        per iteration. Size cost: at most one extra row per sink node
-        (<= n on top of m), cached once per graph and shared by every query.
+        node's push traverses its virtual edge, which the power method's
+        per-query projection (operators/power_method.source_set_edges)
+        points at the query's source set. The superstep loop then needs
+        neither a per-node out-degree join nor a per-superstep global
+        aggregation over the (usually empty) dangling branch — two fewer
+        exchanges per superstep, which at 1000-executor scale is two fewer
+        shuffle barriers per iteration. Size cost: at most one extra row per
+        sink node (<= n on top of m), cached once per graph and shared by
+        every query.
         """
         shuffle_n = int(self.spark.conf.get("spark.sql.shuffle.partitions"))
         virt = self.dangling_nodes.select(

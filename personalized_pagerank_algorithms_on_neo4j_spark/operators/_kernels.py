@@ -7,7 +7,9 @@ golden implementations the distributed DataFrame loops are tested against.
 
 Semantics ported (behavior, not code) from the reference:
 - power_method:      Power_Method.java:43-101 (100 synchronous pushes,
-                     dangling residue -> source)
+                     dangling residue -> source); the batch push at rmax 0
+- pagerank:          Neo4j_Method.java:66-98 (damping 1-alpha, dangling mass
+                     dropped) in rank form, start and restart vectors given
 - forward_push_*:    Forward_Push.java:63-142 (queue schedule) and the batch
                      (frontier-synchronous) schedule used by the distributed
                      path — same fixed point, different visit order
@@ -33,23 +35,18 @@ from ..graph import LocalGraph
 
 
 def power_method(
-    lg: LocalGraph, s: int, alpha: float = 0.15, iterations: int = 100
+    lg: LocalGraph, s: int | list[int], alpha: float = 0.15, iterations: int = 100
 ) -> np.ndarray:
-    """Exact PPR estimate: `iterations` synchronous full-graph pushes."""
-    n = lg.n
-    r = np.zeros(n)
-    r[s] = 1.0
-    pi = np.zeros(n)
-    src, dst = lg.edge_src, lg.edge_dst
-    out = lg.out_deg
-    inv_out = np.where(out > 0, 1.0 / np.maximum(out, 1), 0.0)
-    dangling = out == 0
-    for _ in range(iterations):
-        pi = pi + alpha * r
-        push = (1.0 - alpha) * r
-        nr = np.bincount(dst, weights=push[src] * inv_out[src], minlength=n).astype(np.float64)
-        nr[s] += push[dangling].sum()
-        r = nr
+    """Exact PPR estimate: `iterations` synchronous full-graph pushes from
+    the source ``s``, or from a source set (a list of distinct dense ids:
+    start and dangling mass spread uniformly over the set).
+
+    The batch push at rmax 0: every node with residue pushes on every
+    superstep. The residue is passed in, so an out-degree-0 source pushes
+    too and the reserve mass is 1 - (1-alpha)^iterations."""
+    r = np.zeros(lg.n)
+    r[s] = 1.0 / np.size(s)
+    pi, _, _ = forward_push_batch(lg, s, alpha, 0.0, residue=r, max_supersteps=iterations)
     return pi
 
 
@@ -111,6 +108,8 @@ def forward_push_batch(
 ) -> tuple[np.ndarray, np.ndarray, int]:
     """Frontier-synchronous push: per superstep, *every* node with
     r > 0 and (out == 0 or r/out >= rmax) pushes simultaneously.
+    Dangling mass returns to ``s``; with a passed ``residue``, ``s`` may
+    be a source set (dense ids) that shares the dangling mass evenly.
 
     Same fixed point as the queue schedule (push is linear and
     order-independent over the residue vector); this schedule is what the
@@ -127,11 +126,14 @@ def forward_push_batch(
             return pi, r, 0
         r[s] = 1.0
     src, dst = lg.edge_src, lg.edge_dst
-    inv_out = np.where(out > 0, 1.0 / np.maximum(out, 1), 0.0)
+    # per-edge 1/out(src) and the per-node push threshold, once per call
+    edge_inv_out = np.where(out > 0, 1.0 / np.maximum(out, 1), 0.0)[src]
+    threshold = rmax * out
     dangling = out == 0
+    k = np.size(s)
     steps = 0
     for _ in range(max_supersteps):
-        qual = (r > 0) & (dangling | (r >= rmax * out))
+        qual = (r > 0) & (dangling | (r >= threshold))
         if not qual.any():
             break
         steps += 1
@@ -139,8 +141,8 @@ def forward_push_batch(
         pi = pi + alpha * rq
         r = np.where(qual, 0.0, r)
         push = (1.0 - alpha) * rq
-        r = r + np.bincount(dst, weights=push[src] * inv_out[src], minlength=n).astype(np.float64)
-        r[s] += push[dangling].sum()
+        r = r + np.bincount(dst, weights=push[src] * edge_inv_out, minlength=n)
+        r[s] += push[dangling].sum() / k
     return pi, r, steps
 
 
@@ -412,75 +414,20 @@ def fora_topk(
 # ---------------------------------------------------------------------------
 
 
-def personalized_pagerank(
-    lg: LocalGraph, s: int, alpha: float, iterations: int
+def pagerank(
+    lg: LocalGraph, start: np.ndarray, restart: np.ndarray, alpha: float, iterations: int
 ) -> np.ndarray:
-    """Comparator with Neo4j's convention (damping = 1-alpha, restart mass to
-    the source each iteration, dangling mass dropped), then sum-normalized
-    (Neo4j_Method.java:66-98). Intentionally not oracle-exact — the reference
-    observes the same mismatch (dissertation section 5.3)."""
-    n = lg.n
+    """Neo4j's PageRank convention (damping d = 1-alpha, dangling mass
+    dropped) in rank form: x <- sum_{u->v} d * x(u) / out(u) + restart(v),
+    `iterations` times from ``start``. The personalized comparator starts at
+    e_s with restart (1-d) e_s and sum-normalizes (Neo4j_Method.java:66-98);
+    whole-graph PageRank starts at 1/n with restart (1-d)/n and keeps raw
+    scores (gds.pageRank without sourceNodes)."""
     d = 1.0 - alpha
-    rank = np.zeros(n)
-    rank[s] = 1.0
     src, dst = lg.edge_src, lg.edge_dst
     out = lg.out_deg
-    inv_out = np.where(out > 0, 1.0 / np.maximum(out, 1), 0.0)
+    edge_inv_out = np.where(out > 0, 1.0 / np.maximum(out, 1), 0.0)[src]
+    rank = start
     for _ in range(iterations):
-        contrib = np.bincount(dst, weights=rank[src] * inv_out[src] * d, minlength=n).astype(np.float64)
-        rank = contrib
-        rank[s] += 1.0 - d
-    total = rank.sum()
-    return rank / total if total > 0 else rank
-
-def pagerank_global(lg: LocalGraph, alpha: float, iterations: int) -> np.ndarray:
-    """Whole-graph PageRank in the same Neo4j-damping convention as the
-    personalized comparator (damping d = 1-alpha, dangling mass dropped),
-    but with the UNIFORM 1/n start and restart vector — the first verb a
-    Neo4j GDS user runs (gds.pageRank ~ Neo4j_Method.java:66-98 without
-    the sourceNodes personalization). Fixed iterations, raw scores (GDS
-    does not normalize by default)."""
-    n = lg.n
-    d = 1.0 - alpha
-    rank = np.full(n, 1.0 / n, dtype=np.float64)
-    src, dst = lg.edge_src, lg.edge_dst
-    out = lg.out_deg
-    inv_out = np.where(out > 0, 1.0 / np.maximum(out, 1), 0.0)
-    restart = (1.0 - d) / n
-    for _ in range(iterations):
-        rank = (
-            np.bincount(
-                dst, weights=rank[src] * inv_out[src] * d, minlength=n
-            ).astype(np.float64)
-            + restart
-        )
+        rank = np.bincount(dst, weights=rank[src] * edge_inv_out * d, minlength=lg.n) + restart
     return rank
-
-def power_method_multi(
-    lg: LocalGraph, sources: list[int], alpha: float, iterations: int
-) -> np.ndarray:
-    """Multi-source PPR (the gds.pageRank sourceNodes-list shape in this
-    engine's dangling convention): restart/start mass uniform over the
-    source SET, and dangling mass returns uniformly to the set — the
-    single-source recurrence is the k=1 special case."""
-    n = lg.n
-    k = len(sources)
-    srcs = np.asarray(sorted(set(sources)), dtype=np.int64)
-    assert len(srcs) == k, "duplicate source ids"
-    r = np.zeros(n)
-    r[srcs] = 1.0 / k
-    pi = np.zeros(n)
-    src, dst = lg.edge_src, lg.edge_dst
-    out = lg.out_deg
-    inv_out = np.where(out > 0, 1.0 / np.maximum(out, 1), 0.0)
-    dangling = out == 0
-    for _ in range(iterations):
-        pi = pi + alpha * r
-        push = (1.0 - alpha) * r
-        nr = np.bincount(
-            dst, weights=push[src] * inv_out[src], minlength=n
-        ).astype(np.float64)
-        nr[srcs] += push[dangling].sum() / k
-        r = nr
-    return pi
-

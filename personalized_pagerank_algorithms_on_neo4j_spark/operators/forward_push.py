@@ -70,9 +70,12 @@ def forward_push(
 
 def source_is_dangling(graph: PropertyGraph, source: int) -> bool:
     """Whether ``source`` has out-degree 0 (one Spark job): its PPR is then
-    the single row (source, 1.0) and no push runs."""
+    the single row (source, 1.0) and no push runs. A source id that is not
+    in the graph raises the ``KeyError`` the local path raises."""
     row = graph.degrees.where(F.col("node") == int(source)).select("out_degree").take(1)
-    return not row or row[0][0] == 0
+    if not row:
+        raise KeyError(f"node id {source} not in graph")
+    return row[0][0] == 0
 
 
 def dangling_source_result(graph: PropertyGraph, source: int) -> DataFrame:

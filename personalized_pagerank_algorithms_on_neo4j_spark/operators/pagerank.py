@@ -1,4 +1,5 @@
-"""Classic personalized PageRank comparator (I8).
+"""Classic personalized PageRank comparator (I8) and the whole-graph
+PageRanks in Neo4j's convention.
 
 Reference: Neo4j_Method.java:66-98 runs Neo4j's built-in PageRank with
 damping = 1 - alpha (inverted convention), the source node as the only
@@ -10,10 +11,20 @@ convention, not the oracle.
 
 rank_{i+1}(v) = (1-d)*[v = s] + d * sum_{u->v} rank_i(u)/out(u), d = 1-alpha,
 followed by rank / sum(rank).
+
+It is the power method's recurrence with another restart vector and with
+dangling mass dropped, so both backends are shared: the local kernel is
+`_kernels.pagerank` (rank form, start and restart vectors passed in), and
+every distributed loop here — the comparator, `pagerank_global`,
+`article_rank` and `pagerank_weighted` — is `power_method.propagate` over
+`graph.edges_deg` (or a weighted edge table), where a dangling node has no
+edge to push along. `pagerank_snapshots` keeps its own (snap, node)-keyed
+loop.
 """
 
 from __future__ import annotations
 
+import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -27,6 +38,7 @@ from ..plans.iterative import (
 )
 from . import _kernels
 from ._result import ppr_result_from_dense
+from .power_method import propagate, source_restart
 
 
 def personalized_pagerank(
@@ -36,11 +48,33 @@ def personalized_pagerank(
     alpha: float = DEFAULT_ALPHA,
     mode: str = "auto",
 ) -> DataFrame:
+    d = 1.0 - alpha
     if graph.resolve_mode(mode) == "local":
         lg = graph.local
-        pi = _kernels.personalized_pagerank(lg, lg.dense(source), alpha, iterations)
-        return ppr_result_from_dense(graph, pi)
-    return _pagerank_distributed(graph, source, iterations, alpha)
+        start = np.zeros(lg.n)
+        start[lg.dense(source)] = 1.0
+        rank = _kernels.pagerank(lg, start, (1.0 - d) * start, alpha, iterations)
+        total = rank.sum()
+        return ppr_result_from_dense(graph, rank / total if total > 0 else rank)
+    restart = source_restart(graph, [int(source)], 1.0 - d)
+    scores = propagate(
+        edges=graph.edges_deg,
+        contrib=F.lit(d) * F.col("rank") / F.col("src_out_degree"),
+        restart=restart,
+        n=graph.n,
+        iterations=iterations,
+        rank0=restart.select("node", F.lit(1.0).alias("rank")),
+    )
+    # P4 sum-normalization (Neo4j_Method.java:80-98): ONE scalar aggregate
+    # broadcast back over the vector — never a window over (), which
+    # WindowExec executes in a single partition (the whole O(n) rank
+    # vector through one task at scale). Checkpoint first: the frame is
+    # read twice (scalar aggregate + the join branch).
+    pos = scores.where(F.col("score") > 0).localCheckpoint(eager=True)
+    total = pos.agg(F.sum("score").alias("_t"))
+    return pos.crossJoin(F.broadcast(total)).select(
+        "node", (F.col("score") / F.col("_t")).alias("ppr")
+    )
 
 
 def pagerank_global(
@@ -60,16 +94,17 @@ def pagerank_global(
     each superstep against the cached pre-partitioned edge table; the
     restart vector is derived once from the node table and checkpointed.
     """
+    d = 1.0 - alpha
     if graph.resolve_mode(mode) == "local":
         import pandas as pd
 
         lg = graph.local
-        r = _kernels.pagerank_global(lg, alpha, iterations)
+        r = _kernels.pagerank(
+            lg, np.full(lg.n, 1.0 / lg.n), np.full(lg.n, (1.0 - d) / lg.n), alpha, iterations
+        )
         pdf = pd.DataFrame({"node": lg.ids, "score": r})
         return graph.spark.createDataFrame(pdf, schema="node long, score double")
-    d = 1.0 - alpha
-    return _uniform_restart_loop(
-        graph.spark,
+    return propagate(
         edges=graph.edges_deg,
         contrib=F.lit(d) * F.col("rank") / F.col("src_out_degree"),
         restart=_uniform_restart_vector(graph, d),
@@ -86,48 +121,6 @@ def _uniform_restart_vector(graph: PropertyGraph, d: float) -> DataFrame:
         F.col("id").alias("node"),
         F.lit((1.0 - d) / graph.n).alias("rank"),
     ).localCheckpoint(eager=True)
-
-
-def _uniform_restart_loop(
-    spark,
-    edges: DataFrame,
-    contrib,
-    restart: DataFrame,
-    n: int,
-    iterations: int,
-    rank0: DataFrame | None = None,
-) -> DataFrame:
-    """The shared uniform-restart superstep loop behind `pagerank_global`
-    and `pagerank_weighted` (one definition of the loop discipline):
-    AQE off for the whole loop (the established iterative-plan rule —
-    fixed-shape join+agg plans re-planned per superstep cost more than
-    they save; plans/iterative.py), shuffle partitions state-scaled ONLY
-    on the broadcast path (loop_shuffle_partitions clamps to the session
-    default at scale, so the non-broadcast path keeps full parallelism),
-    and the node-bounded rank vector broadcast into the edge join so the
-    cached edge table never re-exchanges. ``contrib`` is the per-edge
-    contribution expression over the joined (rank, edge) row."""
-    rank = (
-        rank0
-        if rank0 is not None
-        else restart.select("node", F.lit(1.0 / n).alias("rank"))
-    )
-    loop = SuperstepLoop(checkpoint_every=4)
-    small = n <= BROADCAST_NODE_BOUND
-    loop_parts = loop_shuffle_partitions(spark, n) if small else None
-    with static_superstep_plan(spark, shuffle_partitions=loop_parts):
-        for _ in range(iterations):
-            rj = F.broadcast(rank) if small else rank
-            step = rj.join(edges, rj.node == edges.src).select(
-                F.col("dst").alias("node"), contrib.alias("rank")
-            )
-            rank = (
-                step.unionAll(restart)
-                .groupBy("node")
-                .agg(F.sum("rank").alias("rank"))
-            )
-            rank = loop.materialize(rank)
-    return rank.select("node", F.col("rank").alias("score"))
 
 
 def article_rank(
@@ -155,7 +148,7 @@ def article_rank(
 
     Scale shape: identical to `pagerank_global` — the O(n) rank vector is
     the only per-superstep shuffle against the cached pre-partitioned edge
-    table (`_uniform_restart_loop`'s discipline)."""
+    table (`power_method.propagate`'s discipline)."""
     d = 1.0 - alpha
     avg_out = graph.m / graph.n  # exact ints -> one IEEE division, portable
     # Driver-local kernel under the LocalGraph cutoff (the pagerank_global
@@ -164,7 +157,6 @@ def article_rank(
     # bincount summation ORDER differs from the hash aggregate, the drift
     # class the unrolled oracle already tolerates under ROUND(_, 9).
     if graph.fits_local():
-        import numpy as np
         import pandas as pd
 
         lg = graph.local
@@ -184,8 +176,7 @@ def article_rank(
             pd.DataFrame({"node": lg.ids, "score": rank}),
             "node long, score double",
         )
-    return _uniform_restart_loop(
-        graph.spark,
+    return propagate(
         edges=graph.edges_deg,
         contrib=F.lit(d)
         * F.col("rank")
@@ -330,7 +321,6 @@ def _pagerank_snapshots_local(
     row for nodes of the SHARED node table; an edge dst outside the node
     table holds a row exactly while it receives (strictly positive)
     contributions — dense mass > 0 reproduces that set."""
-    import numpy as np
     import pandas as pd
 
     from .._nputil import unique_stable
@@ -492,8 +482,7 @@ def pagerank_weighted(
         rank0 = spark.createDataFrame(
             [(int(source), 1.0)], "node long, rank double"
         )
-    return _uniform_restart_loop(
-        spark,
+    return propagate(
         edges=ew,
         contrib=F.lit(d) * F.col("rank") * F.col("p"),
         restart=restart,
@@ -516,7 +505,6 @@ def _pagerank_weighted_local(
     nodes holding mass (contributions are strictly positive products, so
     mass > 0 is exactly the distributed loop's reachable ∪ {source} row
     set)."""
-    import numpy as np
     import pandas as pd
 
     from .._nputil import group_by_key, unique_stable
@@ -636,35 +624,3 @@ def pagerank_weighted_personalized_oracle_sql(
 SELECT node, ROUND(rank, 9) AS score FROM pw{iterations}
 WHERE ROUND(rank, 9) > 0
 """
-
-
-def _pagerank_distributed(
-    graph: PropertyGraph, source: int, iterations: int, alpha: float
-) -> DataFrame:
-    d = 1.0 - alpha
-    spark = graph.spark
-    restart = spark.createDataFrame(
-        [(int(source), 1.0 - d)], schema="node long, rank double"
-    ).localCheckpoint(eager=True)  # read every superstep; derive once
-    rank0 = spark.createDataFrame(
-        [(int(source), 1.0)], schema="node long, rank double"
-    )
-    scores = _uniform_restart_loop(
-        spark,
-        edges=graph.edges_deg,
-        contrib=F.lit(d) * F.col("rank") / F.col("src_out_degree"),
-        restart=restart,
-        n=graph.n,
-        iterations=iterations,
-        rank0=rank0,
-    )
-    # P4 sum-normalization (Neo4j_Method.java:80-98): ONE scalar aggregate
-    # broadcast back over the vector — never a window over (), which
-    # WindowExec executes in a single partition (the whole O(n) rank
-    # vector through one task at scale). Checkpoint first: the frame is
-    # read twice (scalar aggregate + the join branch).
-    pos = scores.where(F.col("score") > 0).localCheckpoint(eager=True)
-    total = pos.agg(F.sum("score").alias("_t"))
-    return pos.crossJoin(F.broadcast(total)).select(
-        "node", (F.col("score") / F.col("_t")).alias("ppr")
-    )

@@ -1,16 +1,27 @@
-"""Power Method (I3) — the correctness oracle.
+"""Synchronous propagation: the Power Method (I3), its multi-source form, and
+the one distributed superstep loop that the Neo4j-convention PageRanks
+(operators/pagerank.py) share with them.
 
 Reference: Power_Method.java:43-101. `iterations` synchronous supersteps; per
 superstep every node v with residue r(v): reserve(v) += alpha*r(v); spreads
 (1-alpha)*r(v)/out(v) to out-neighbors; out-degree-0 nodes return
 (1-alpha)*r(v) to the *source* (the dangling->source rule that distinguishes
-this PPR definition from classic PageRank teleport).
+this PPR definition from classic PageRank teleport). Multi-source PPR starts
+with 1/k on each of k sources and returns dangling mass evenly to the set.
+
+All of these run one recurrence, x <- restart + (1-alpha) P^T x; only the
+restart vector and where dangling mass goes differ.
 
 Physical strategies:
-- distributed: one join + union + groupBy per superstep against the cached,
-  src-partitioned edge table; lineage truncated via localCheckpoint.
-- local: vectorized numpy kernel on the driver CSR snapshot (picked when the
-  graph is under the broadcast-like size cutoff).
+- local: `_kernels.power_method`, the batch forward push at rmax 0 with the
+  source (set) residue passed in (picked when the graph is under the
+  driver-local cutoff).
+- distributed: `propagate`, the recurrence in rank form. The reserve after T
+  supersteps equals x_T with x_0 = 0 and restart alpha/k on each source; x_1
+  is the restart itself, so the loop starts there. The dangling policy lives
+  in the edge table: `source_set_edges` points each dangling node's virtual
+  edge of `graph.edges_push` at the sources, and the PageRanks read
+  `graph.edges_deg`, where dangling mass has nowhere to go.
 """
 
 from __future__ import annotations
@@ -20,7 +31,12 @@ from pyspark.sql import functions as F
 
 from ..config import DEFAULT_ALPHA, POWER_ITERATIONS
 from ..graph import PropertyGraph
-from ..plans.iterative import static_superstep_plan
+from ..plans.iterative import (
+    BROADCAST_NODE_BOUND,
+    SuperstepLoop,
+    loop_shuffle_partitions,
+    static_superstep_plan,
+)
 from . import _kernels
 from ._result import ppr_result_from_dense
 
@@ -33,64 +49,8 @@ def power_method(
     mode: str = "auto",
 ) -> DataFrame:
     """Returns DataFrame(node: long, ppr: double), only rows with ppr > 0."""
-    if graph.resolve_mode(mode) == "local":
-        lg = graph.local
-        pi = _kernels.power_method(lg, lg.dense(source), alpha, iterations)
-        return ppr_result_from_dense(graph, pi)
-    return _power_method_distributed(graph, source, alpha, iterations)
+    return power_method_multi(graph, [source], alpha, iterations, mode)
 
-
-def _power_method_distributed(
-    graph: PropertyGraph, source: int, alpha: float, iterations: int
-) -> DataFrame:
-    spark = graph.spark
-    # edges + one virtual (v, -1, 1) edge per dangling node: the dangling->
-    # source return is a plain push whose dst is remapped below, so the loop
-    # needs no out-degree join and no global aggregation per superstep
-    # (graph.edges_push) — per superstep only TWO exchanges remain: the state
-    # shuffle into the edge join and the groupBy merge.
-    edges = graph.edges_push
-    src_lit = F.lit(int(source)).cast("long")
-
-    state = spark.createDataFrame(
-        [(int(source), 1.0, 0.0)], schema="node long, residue double, reserve double"
-    )
-    with static_superstep_plan(spark):
-        for _ in range(iterations):
-            # `s` fans out into TWO branches (kept/pushed); it must be
-            # materialized every superstep or each superstep recomputes its
-            # predecessor 2x — compounding to 2^k between checkpoints (measured
-            # 19 s/superstep at sf0.1 with a 4-step cadence on the pre-rewrite
-            # 3-branch loop vs ~1 s with per-step materialization)
-            s = state.localCheckpoint(eager=True)
-            kept = s.select(
-                "node",
-                F.lit(0.0).alias("residue"),
-                (F.col("reserve") + F.lit(alpha) * F.col("residue")).alias("reserve"),
-            )
-            pushed = (
-                # pushing zero residue contributes exactly 0.0 to every sum —
-                # pruning it shrinks the join input, never the result
-                s.where(F.col("residue") != 0.0)
-                .join(edges, s.node == edges.src)
-                .select(
-                    F.when(F.col("dst") < 0, src_lit).otherwise(F.col("dst")).alias("node"),
-                    (F.lit(1.0 - alpha) * F.col("residue") / F.col("src_out_degree")).alias(
-                        "residue"
-                    ),
-                    F.lit(0.0).alias("reserve"),
-                )
-            )
-            state = (
-                kept.unionAll(pushed)
-                .groupBy("node")
-                .agg(F.sum("residue").alias("residue"), F.sum("reserve").alias("reserve"))
-            )
-            # state itself is read once (by the next superstep's checkpoint) —
-            # its groupBy folds into that job, no extra materialization
-    return state.where(F.col("reserve") > 0).select(
-        "node", F.col("reserve").alias("ppr")
-    )
 
 def power_method_multi(
     graph: PropertyGraph,
@@ -110,77 +70,98 @@ def power_method_multi(
         raise ValueError("sources is empty")
     if graph.resolve_mode(mode) == "local":
         lg = graph.local
-        pi = _kernels.power_method_multi(
-            lg, [lg.dense(s) for s in sources], alpha, iterations
-        )
+        pi = _kernels.power_method(lg, [lg.dense(s) for s in sources], alpha, iterations)
         return ppr_result_from_dense(graph, pi)
-    return _power_method_multi_distributed(graph, sources, alpha, iterations)
+    restart = source_restart(graph, sources, alpha / len(sources))
+    if iterations < 1:
+        return graph.spark.createDataFrame([], "node long, ppr double")
+    ranks = propagate(
+        edges=source_set_edges(graph, sources),
+        contrib=F.lit(1.0 - alpha) * F.col("rank") / F.col("src_out_degree"),
+        restart=restart,
+        n=graph.n,
+        iterations=iterations - 1,
+        rank0=restart,
+    )
+    return ranks.where(F.col("score") > 0).select("node", F.col("score").alias("ppr"))
 
 
-def _power_method_multi_distributed(
-    graph: PropertyGraph, sources: list[int], alpha: float, iterations: int
+def source_restart(graph: PropertyGraph, sources: list[int], mass: float) -> DataFrame:
+    """(node, rank) with ``mass`` on each source, a filter over the cached
+    node table that every superstep re-reads. A source id that is not in
+    the graph raises the ``KeyError`` the local path raises
+    (`LocalGraph.dense`); the check is one small job."""
+    restart = graph.nodes.where(F.col("id").isin(sources)).select(
+        F.col("id").alias("node"), F.lit(mass).alias("rank")
+    )
+    missing = set(sources) - {r[0] for r in restart.collect()}
+    if missing:
+        raise KeyError(f"node id {min(missing)} not in graph")
+    return restart
+
+
+def source_set_edges(graph: PropertyGraph, sources: list[int]) -> DataFrame:
+    """`graph.edges_push` with each dangling node's virtual (v, -1) edge
+    replaced by one edge to every source, all k of them weighted as an
+    out-degree of k: the dangling node's (1-alpha)*x(v) returns evenly to
+    the set. A projection of the cached src-partitioned table, so the
+    superstep join never re-exchanges it."""
+    dangling = F.col("dst") < 0
+    targets = F.array(*(F.lit(s).cast("long") for s in sources))
+    return graph.edges_push.select(
+        "src",
+        F.explode(F.when(dangling, targets).otherwise(F.array("dst"))).alias("dst"),
+        (F.col("src_out_degree") * F.when(dangling, len(sources)).otherwise(1)).alias(
+            "src_out_degree"
+        ),
+    )
+
+
+def propagate(
+    edges: DataFrame,
+    contrib,
+    restart: DataFrame,
+    n: int,
+    iterations: int,
+    rank0: DataFrame | None = None,
 ) -> DataFrame:
-    spark = graph.spark
-    k = len(sources)
-    srcs = spark.createDataFrame([(int(x),) for x in sources], "s long")
-    # Pre-fan the virtual dangling edges over the source set ONCE, outside
-    # the loop: each (v, -1) row becomes k rows (v, s_i, factor 1/k), real
-    # edges keep factor 1. The superstep then stays the single-source
-    # loop's ONE join + ONE branch shape — a dst>=0/dst<0 branch split
-    # inside the loop would execute the dominant state-edges join twice
-    # per superstep (two consumers of a non-exchange subtree).
-    ep = graph.edges_push
-    edges = (
-        ep.where(F.col("dst") >= 0)
-        .select("src", "dst", "src_out_degree", F.lit(1.0).alias("factor"))
-        .unionAll(
-            ep.where(F.col("dst") < 0)
-            .crossJoin(F.broadcast(srcs))
-            .select(
-                "src",
-                F.col("s").alias("dst"),
-                "src_out_degree",
-                F.lit(1.0 / k).alias("factor"),
-            )
-        )
-        .localCheckpoint(eager=True)
-    )
+    """The synchronous superstep loop behind power, multi-source power, the
+    personalized and whole-graph PageRanks, ArticleRank and weighted
+    PageRank: `iterations` times
 
-    state = spark.createDataFrame(
-        [(int(x), 1.0 / k, 0.0) for x in sources],
-        schema="node long, residue double, reserve double",
+        x(v) <- sum over edges u->v of contrib + restart(v),
+
+    from ``rank0`` (default: 1/n on every node of ``restart``). ``contrib``
+    is the per-edge expression over the joined (rank, edge) row; ``edges``
+    is (src, dst, ...). Returns (node, score).
+
+    Loop discipline: AQE off for the whole loop (fixed-shape join+agg plans
+    re-planned per superstep cost more than they save; plans/iterative.py),
+    shuffle partitions state-scaled ONLY on the broadcast path
+    (loop_shuffle_partitions clamps to the session default at scale, so the
+    non-broadcast path keeps full parallelism), and the node-bounded rank
+    vector broadcast into the edge join so the cached edge table never
+    re-exchanges. The state is read once per superstep, so the lineage is
+    cut every 4 supersteps, not every one."""
+    rank = (
+        rank0
+        if rank0 is not None
+        else restart.select("node", F.lit(1.0 / n).alias("rank"))
     )
-    with static_superstep_plan(spark):
+    spark = edges.sparkSession
+    loop = SuperstepLoop(checkpoint_every=4)
+    small = n <= BROADCAST_NODE_BOUND
+    loop_parts = loop_shuffle_partitions(spark, n) if small else None
+    with static_superstep_plan(spark, shuffle_partitions=loop_parts):
         for _ in range(iterations):
-            s = state.localCheckpoint(eager=True)
-            kept = s.select(
-                "node",
-                F.lit(0.0).alias("residue"),
-                (F.col("reserve") + F.lit(alpha) * F.col("residue")).alias("reserve"),
+            rj = F.broadcast(rank) if small else rank
+            step = rj.join(edges, rj.node == edges.src).select(
+                F.col("dst").alias("node"), contrib.alias("rank")
             )
-            pushed = (
-                s.where(F.col("residue") != 0.0)
-                .join(edges, s.node == edges.src)
-                .select(
-                    F.col("dst").alias("node"),
-                    (
-                        F.lit(1.0 - alpha)
-                        * F.col("residue")
-                        * F.col("factor")
-                        / F.col("src_out_degree")
-                    ).alias("residue"),
-                    F.lit(0.0).alias("reserve"),
-                )
-            )
-            state = (
-                kept.unionAll(pushed)
+            rank = (
+                step.unionAll(restart)
                 .groupBy("node")
-                .agg(
-                    F.sum("residue").alias("residue"),
-                    F.sum("reserve").alias("reserve"),
-                )
+                .agg(F.sum("rank").alias("rank"))
             )
-    return state.where(F.col("reserve") > 0).select(
-        "node", F.col("reserve").alias("ppr")
-    )
-
+            rank = loop.materialize(rank)
+    return rank.select("node", F.col("rank").alias("score"))

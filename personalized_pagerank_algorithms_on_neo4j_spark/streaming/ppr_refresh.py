@@ -119,8 +119,13 @@ def start_incremental_prep_refresh(
     relevant to this active node" and refreshes in O(dirty targets)).
 
     `user_to_node(df) -> DataFrame(target: long)` maps batch user ids into
-    graph node ids (default: identity on user_id)."""
-    from ..operators.backward_search import backward_search_all
+    graph node ids (default: identity on user_id).
+
+    Each batch makes the same local/distributed choice as
+    `base_preprocess(mode="auto")`: per-target numpy kernels below the
+    driver-local cutoff, the multi-target distributed reverse push above
+    it; threshold 0 keeps every row the reverse push returns."""
+    from ..operators.base_all_pair import base_preprocess
 
     def refresh(batch_df: DataFrame, epoch_id: int) -> None:
         users = batch_df.select("user_id").distinct()
@@ -135,9 +140,7 @@ def start_incremental_prep_refresh(
         )
         if targets.isEmpty():
             return
-        fresh = backward_search_all(graph, targets, rmax, alpha).select(
-            F.col("node").alias("source"), "target", "ppr"
-        )
+        fresh = base_preprocess(graph, 0.0, rmax=rmax, alpha=alpha, targets=targets)
         # dynamic partition overwrite: only dirty target= partitions rewrite
         (
             fresh.write.mode("overwrite")

@@ -321,8 +321,8 @@ def test_hits_oracle_zero_iterations_boundary():
 def test_pagerank_global_kernel_invariants(lg, iters):
     import numpy as np
 
-    r = _kernels.pagerank_global(lg, ALPHA, iters)
     n = lg.n
+    r = _kernels.pagerank(lg, np.full(n, 1.0 / n), np.full(n, ALPHA / n), ALPHA, iters)
     # every node holds at least the restart mass
     assert (r >= ALPHA / n - 1e-15).all()
     # total mass is 1 minus whatever leaked through dangling nodes
@@ -333,7 +333,7 @@ def test_pagerank_global_kernel_invariants(lg, iters):
     # one more iteration changes nothing once converged... not asserted;
     # instead: iterating is a contraction toward the uniform-restart
     # fixed point, so later iterates never fall below the restart floor
-    r2 = _kernels.pagerank_global(lg, ALPHA, iters + 1)
+    r2 = _kernels.pagerank(lg, np.full(n, 1.0 / n), np.full(n, ALPHA / n), ALPHA, iters + 1)
     assert (r2 >= ALPHA / n - 1e-15).all()
 
 

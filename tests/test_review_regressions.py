@@ -172,7 +172,7 @@ def test_dangling_nodes_cover_edge_only_endpoints(spark):
     # conservation: alpha of the live residue banks into reserve each
     # superstep, so after k steps sum(reserve) == 1 - (1-alpha)^k exactly —
     # a leaked virtual edge (pre-fix: node 99) would fall visibly short
-    df = power_method._power_method_distributed(g, 1, 0.15, 8)
+    df = power_method.power_method(g, 1, 0.15, 8, mode="distributed")
     mass = df.agg(F.sum("ppr").alias("m")).collect()[0]["m"]
     assert abs(mass - (1.0 - 0.85**8)) < 1e-12
 

@@ -89,8 +89,20 @@ def key_fns(spark, g, eng, src):
             src, algo="montecarlo", epsilon=0.5, mode="distributed",
             max_supersteps=10,
         ).count(),
+        # the synchronous-propagation loop (operators/power_method.propagate)
+        # behind each of these four verbs; customer keys are contiguous, so
+        # src..src+2 are the three smallest customers
         "power_dist10": lambda: eng.ppr(
             src, algo="power", iterations=10, mode="distributed"
+        ).count(),
+        "ppr_multi_dist10": lambda: eng.ppr_multi(
+            [src, src + 1, src + 2], iterations=10, mode="distributed"
+        ).count(),
+        "pagerank_dist10": lambda: eng.ppr(
+            src, algo="pagerank", iterations=10, mode="distributed"
+        ).count(),
+        "graph_pagerank_dist10": lambda: g.pagerank(
+            iterations=10, mode="distributed"
         ).count(),
         "fwdpush_dist10": lambda: eng.ppr(
             src, algo="fwdpush", rmax=1e-6, mode="distributed", max_supersteps=10
